@@ -4,7 +4,8 @@
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <float>}
+   "queries": {name: sec, ...}, "jobs": {name: Spark jobs, ...},
+   "codegen_compiles": <Janino compiles over the timed runs>, "sf": <float>}
 
 Each query is materialized fully via the ``noop`` sink (no driver
 collect, no disk write) — measures plan execution, the thing that
@@ -13,6 +14,7 @@ scales.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import re
@@ -454,12 +456,23 @@ def main() -> None:
     drift: list[float] = []
     drift2: list[float] = []
     _query_counter = [0]
+    sc = spark.sparkContext
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    jobs: dict[str, int] = {}
+    runs = itertools.count()
 
     def _run_once(name: str) -> float:
+        # a job group per run, so the status tracker counts its jobs
+        # (a streaming query's jobs carry its own group, not this one)
+        group = f"bench-{next(runs)}"
+        sc.setJobGroup(group, name)
         t0 = time.time()
         qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
         dt = time.time() - t0
+        sc._jsc.clearJobGroup()
         spark.catalog.clearCache()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
         return dt
 
     def timed(names: list[str]) -> tuple[dict[str, float], dict[str, float]]:
@@ -477,8 +490,11 @@ def main() -> None:
                 drift2.append(round(_run_once(DRIFT_QUERY2), 3))
         return med, mins
 
+    compiles0 = codegen.METRIC_COMPILATION_TIME().getCount()
     timings, timings_min = timed(HEADLINE)
     longtail, longtail_min = timed(LONGTAIL)
+    # generated classes compiled (codegen-cache misses) while timing
+    compiles = codegen.METRIC_COMPILATION_TIME().getCount() - compiles0
 
     total = round(sum(timings.values()), 3)
     payload = {
@@ -492,6 +508,9 @@ def main() -> None:
         "longtail": longtail,
         "longtail_min": longtail_min,
         "longtail_total": round(sum(longtail.values()), 3),
+        # Spark jobs of one run of each query (its last timed run)
+        "jobs": {n: jobs[n] for n in HEADLINE + LONGTAIL},
+        "codegen_compiles": compiles,
         "sf": sf,
         "host": {
             "cpus": os.cpu_count(),

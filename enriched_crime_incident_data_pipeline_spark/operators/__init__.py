@@ -14,6 +14,7 @@ from enriched_crime_incident_data_pipeline_spark.operators.dedup import (
 from enriched_crime_incident_data_pipeline_spark.operators.ranks import (
     frequency_rank_table,
     with_frequency_rank,
+    with_frequency_ranks,
 )
 from enriched_crime_incident_data_pipeline_spark.operators.emsstat import (
     propagate_emsstat,
@@ -34,6 +35,7 @@ __all__ = [
     "idempotent_append",
     "frequency_rank_table",
     "with_frequency_rank",
+    "with_frequency_ranks",
     "propagate_emsstat",
     "propagate_emsstat_selfjoin",
     "filter_after_watermark",

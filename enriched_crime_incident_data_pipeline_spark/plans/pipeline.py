@@ -12,6 +12,7 @@ engine.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from enriched_crime_incident_data_pipeline_spark.operators.dedup import (
     dedup_by_key,
@@ -22,7 +23,7 @@ from enriched_crime_incident_data_pipeline_spark.operators.emsstat import (
     propagate_emsstat,
 )
 from enriched_crime_incident_data_pipeline_spark.operators.ranks import (
-    with_frequency_rank,
+    with_frequency_ranks,
 )
 from enriched_crime_incident_data_pipeline_spark.enrich.geocode import (
     with_coordinates,
@@ -59,8 +60,9 @@ def enrich_after_emsstat(
     propagated (e.g. by the fused ``dedup_and_propagate``): ranks →
     coordinates → side_of_town → weather. Every join here is a
     broadcast — the fact side is never re-shuffled."""
-    df = with_frequency_rank(base, "location", "location_rank")
-    df = with_frequency_rank(df, "nature", "incident_rank")
+    df = with_frequency_ranks(
+        base, {"location": "location_rank", "nature": "incident_rank"}
+    )
     df = with_coordinates(df, location_cache)
     df = with_side_of_town(df)
     df = with_weather(df, weather_hourly)
@@ -74,12 +76,22 @@ def run_pipeline(
     weather_hourly: DataFrame,
 ) -> DataFrame:
     """Full batch: bronze rows → typed → idempotent-append set →
-    enriched gold projection (9 columns + keys retained upstream)."""
+    enriched gold projection (9 columns + keys retained upstream).
+
+    ``existing`` (silver columns; extra columns are ignored) is the
+    table the batch appends to. EMSSTAT and both ranks are whole-table
+    semantics (reference src/db/incidents.py:48-74), so the insert set
+    is enriched together with ``existing``; only the inserted rows are
+    returned."""
     silver = to_silver(bronze)
-    silver = (
-        dedup_by_key(silver, "incident_num")
-        if existing is None
-        else idempotent_append(silver, existing, "incident_num")
+    if existing is None:
+        enriched = enrich_incidents(
+            dedup_by_key(silver, "incident_num"), location_cache, weather_hourly
+        )
+        return gold_projection(enriched)
+    fresh = idempotent_append(silver, existing, "incident_num")
+    table = fresh.withColumn("_fresh", F.lit(True)).unionByName(
+        existing.select(*silver.columns).withColumn("_fresh", F.lit(False))
     )
-    enriched = enrich_incidents(silver, location_cache, weather_hourly)
-    return gold_projection(enriched)
+    enriched = enrich_incidents(table, location_cache, weather_hourly)
+    return gold_projection(enriched.filter("_fresh"))

@@ -45,6 +45,7 @@ from enriched_crime_incident_data_pipeline_spark.operators.derive import to_silv
 from enriched_crime_incident_data_pipeline_spark.plans.events_adapter import (
     events_as_incidents_raw,
 )
+from enriched_crime_incident_data_pipeline_spark.schemas import GOLD_TABLE_SCHEMA
 
 
 def silver_stream(events_stream: DataFrame) -> DataFrame:
@@ -66,7 +67,7 @@ def ingest_silver_to_gold(
             "incident_date", F.to_date("incident_ts")
         )
         if os.path.exists(gold_path):
-            existing = spark.read.parquet(gold_path).select("incident_num")
+            existing = read_gold(spark, gold_path).select("incident_num")
             fresh = idempotent_append(batch, existing, "incident_num")
         else:
             fresh = batch.dropDuplicates(["incident_num"])
@@ -85,6 +86,12 @@ def ingest_silver_to_gold(
     q.awaitTermination()
 
 
+def read_gold(spark: SparkSession, gold_path: str) -> DataFrame:
+    """The gold table under its declared schema: no footer job to
+    infer it."""
+    return spark.read.schema(GOLD_TABLE_SCHEMA).parquet(gold_path)
+
+
 def enriched_view(
     spark: SparkSession,
     gold_path: str,
@@ -97,5 +104,5 @@ def enriched_view(
         enrich_incidents,
     )
 
-    gold = spark.read.parquet(gold_path).drop("incident_date")
+    gold = read_gold(spark, gold_path).drop("incident_date")
     return enrich_incidents(gold, location_dim, weather_hourly)

@@ -41,6 +41,24 @@ INCIDENTS_SCHEMA = T.StructType(
     ]
 )
 
+# The streaming-maintained gold table
+# (``plans.streaming_pipeline.ingest_silver_to_gold``): the silver
+# columns of ``operators.derive.to_silver``, hive-partitioned by
+# ``incident_date``. Reading it with this schema skips the footer job
+# a schema-inferring read runs.
+GOLD_TABLE_SCHEMA = T.StructType(
+    [
+        T.StructField("incident_num", T.StringType(), True),
+        T.StructField("incident_ts", T.TimestampType(), True),
+        T.StructField("day_of_week", T.IntegerType(), True),
+        T.StructField("time_of_day", T.IntegerType(), True),
+        T.StructField("location", T.StringType(), True),
+        T.StructField("nature", T.StringType(), True),
+        T.StructField("emsstat", T.IntegerType(), True),
+        T.StructField("incident_date", T.DateType(), True),
+    ]
+)
+
 # Geocode cache / dimension (reference src/db/schema.py:37-44; the
 # reserved, never-written `weather` column is kept for parity,
 # TECHNICAL.md:139).

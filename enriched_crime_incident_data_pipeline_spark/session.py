@@ -14,6 +14,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+CODEGEN_CACHE_ENTRIES = 2000
+
 
 def get_spark(
     app_name: str = "enriched_crime_incident_data_pipeline_spark",
@@ -62,6 +64,18 @@ def get_spark(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
             "64m",
         )
+        # Generated-class cache (static conf, so it must be set here).
+        # Spark's default of 100 entries evicts a daily pass's classes
+        # before the next pass. On the e2ebench daily_reports workload
+        # (seed 3001, 4 cores, rank-by-rank enrichment) a timed day
+        # re-ran a median of 36 Janino compiles (26-54 a day; by
+        # phase: stream ingest 11, geocode-cache step 4, enriched view
+        # 19.5), and 0 with 2000 entries. The fused ranks bring that
+        # session to 91 classes, so the headroom is for sessions that
+        # mix more plans (on corpus_stream, where only this setting
+        # applies, median cpu_s went 11.1 -> 10.3 CPU-s over 5 pairs,
+        # within noise; peak memory did not move).
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "128m")

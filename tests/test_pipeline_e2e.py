@@ -98,6 +98,43 @@ def test_incremental_second_batch_idempotent(spark):
     assert rows[0]["nature"] == "BURGLARY"
 
 
+def test_incremental_batch_enriched_over_whole_table(spark):
+    """EMSSTAT and both ranks are whole-table (reference
+    src/db/incidents.py:48-74): a new row at the minute and address of
+    an existing EMSSTAT row is flagged, and ranks count existing rows."""
+    existing = to_silver(
+        spark.createDataFrame(
+            [
+                ("3/1/2024 8:00", "2024-10", "1 MAIN ST", "MEDICAL", "EMSSTAT"),
+                ("3/1/2024 9:00", "2024-11", "1 MAIN ST", "THEFT", "OK014"),
+            ],
+            INCIDENTS_RAW_SCHEMA,
+        )
+    )
+    batch = spark.createDataFrame(
+        [
+            ("3/1/2024 8:00", "2024-12", "1 MAIN ST", "SEIZURE", "OK014"),
+            ("3/2/2024 1:00", "2024-13", "3 ELM ST", "THEFT", "OK014"),
+            ("3/2/2024 2:00", "2024-14", "3 ELM ST", "THEFT", "OK014"),
+            ("3/1/2024 9:00", "2024-11", "1 MAIN ST", "THEFT", "OK014"),  # dup
+        ],
+        INCIDENTS_RAW_SCHEMA,
+    )
+    cache = spark.createDataFrame([], LOCATION_SCHEMA)
+    wh = spark.createDataFrame([], WEATHER_HOURLY_SCHEMA)
+    rows = run_pipeline(batch, existing, cache, wh).collect()
+    assert len(rows) == 3  # only the inserted rows come back
+    main = [r for r in rows if r["location"] == "1 MAIN ST"]
+    assert [(r["emsstat"], r["location_rank"]) for r in main] == [(1, 1)]
+    # the insert set alone would rank 3 ELM ST (×2) above 1 MAIN ST (×1)
+    assert {r["location_rank"] for r in rows if r["location"] == "3 ELM ST"} == {2}
+    # THEFT: one existing + two new rows
+    assert {r["nature"]: r["incident_rank"] for r in rows} == {
+        "SEIZURE": 2,
+        "THEFT": 1,
+    }
+
+
 def test_adapter_pipeline_on_driver_testdata(spark):
     events = load_table(spark, "/root/testdata/sf0.001", "events")
     bronze = events_as_incidents_raw(events)

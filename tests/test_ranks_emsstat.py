@@ -3,7 +3,11 @@ EMSSTAT propagation fixpoint (src/db/incidents.py:48-55)."""
 
 from __future__ import annotations
 
+import random
+from collections import Counter
 from datetime import datetime
+
+import pytest
 
 from enriched_crime_incident_data_pipeline_spark.operators.emsstat import (
     propagate_emsstat,
@@ -12,6 +16,7 @@ from enriched_crime_incident_data_pipeline_spark.operators.emsstat import (
 from enriched_crime_incident_data_pipeline_spark.operators.ranks import (
     frequency_rank_table,
     with_frequency_rank,
+    with_frequency_ranks,
 )
 
 
@@ -33,6 +38,81 @@ def test_rank_join_back_attaches_to_every_row(spark):
     assert len(out) == 3
     by_loc = {r["location"]: r["location_rank"] for r in out}
     assert by_loc == {"A": 1, "B": 2}
+
+
+def _sql_ranks(values):
+    """RANK() OVER (ORDER BY COUNT(*) DESC) over ``GROUP BY value``,
+    UPDATE-joined back: NULL is a group (its count takes a histogram
+    slot) but never matches the join, so NULL rows get no rank."""
+    counts = Counter(values)
+    rank = {
+        v: 1 + sum(1 for c in counts.values() if c > n) for v, n in counts.items()
+    }
+    return [None if v is None else rank[v] for v in values]
+
+
+RANK_SCHEMA = "id int, location string, nature string"
+
+
+def _rank_frames():
+    rng = random.Random(20261019)
+    frames = {
+        "empty": [],
+        "single_key": [(i, "A", "N") for i in range(5)],
+        "all_null": [(0, None, None), (1, None, "N")],
+    }
+    for case in range(3):
+        locs = [None] + [f"L{j}" for j in range(rng.randint(1, 5))]
+        natures = [None] + [f"N{j}" for j in range(rng.randint(1, 4))]
+        frames[f"random{case}"] = [
+            (i, rng.choice(locs), rng.choice(natures))
+            for i in range(rng.randint(1, 40))
+        ]
+    return frames
+
+
+@pytest.mark.parametrize("name", sorted(_rank_frames()))
+def test_fused_ranks_equal_sequential_ranks(spark, name):
+    """One rank table for both keys gives each key the ranks it gets
+    alone: NULL keys, ties, an empty frame and a single key value."""
+    rows = _rank_frames()[name]
+    df = spark.createDataFrame(rows, RANK_SCHEMA)
+    fused = with_frequency_ranks(
+        df, {"location": "location_rank", "nature": "incident_rank"}
+    )
+    sequential = with_frequency_rank(
+        with_frequency_rank(df, "location", "location_rank"),
+        "nature",
+        "incident_rank",
+    )
+    cols = ["id", "location_rank", "incident_rank"]
+    got = sorted(tuple(r) for r in fused.select(cols).collect())
+    assert got == sorted(tuple(r) for r in sequential.select(cols).collect())
+    ids = [r[0] for r in rows]
+    want = sorted(
+        zip(
+            ids,
+            _sql_ranks([r[1] for r in rows]),
+            _sql_ranks([r[2] for r in rows]),
+        )
+    )
+    assert got == want
+    assert fused.columns == df.columns + ["location_rank", "incident_rank"]
+
+
+def test_rank_table_keeps_null_group(spark):
+    # NULL×3 outranks A×2: the table ranks it, the join-back does not
+    rows = [(None,)] * 3 + [("A",)] * 2 + [("B",)]
+    df = spark.createDataFrame(rows, "location string")
+    table = dict(
+        tuple(r)
+        for r in frequency_rank_table(df, "location", "location_rank").collect()
+    )
+    assert table == {None: 1, "A": 2, "B": 3}
+    joined = with_frequency_rank(df, "location", "location_rank").collect()
+    assert sorted((r[0] or "", r[1] or 0) for r in joined) == (
+        [("", 0)] * 3 + [("A", 2)] * 2 + [("B", 3)]
+    )
 
 
 EMS_ROWS = [

@@ -27,6 +27,7 @@ from enriched_crime_incident_data_pipeline_spark.plans.streaming_pipeline import
 from enriched_crime_incident_data_pipeline_spark.sinks.output import (
     gold_projection,
 )
+from enriched_crime_incident_data_pipeline_spark.schemas import GOLD_TABLE_SCHEMA
 from enriched_crime_incident_data_pipeline_spark.sources import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -63,6 +64,10 @@ def test_streaming_ingest_equals_batch_pipeline(spark, tmp_path):
     assert out.select("incident_num").distinct().count() == events.count()
     # gold is date-partitioned (hive directories)
     assert out.select("incident_date").distinct().count() > 1
+    # and its inferred schema is the one the gold reads declare
+    assert [(f.name, f.dataType) for f in out.schema] == [
+        (f.name, f.dataType) for f in GOLD_TABLE_SCHEMA
+    ]
 
     # the enrichment view over streaming-built gold ≡ the batch DAG
     dim = synthetic_location_dim(events)
@@ -75,6 +80,58 @@ def test_streaming_ingest_equals_batch_pipeline(spark, tmp_path):
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, want.collect())
     )
+
+
+def _view_jobs_and_compiles(spark, gold, dim, wh, group):
+    """Spark jobs (by job group) and Janino compiles of one enriched
+    view over ``gold``."""
+    sc = spark.sparkContext
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    c0 = compiles.METRIC_COMPILATION_TIME().getCount()
+    sc.setJobGroup(group, group)
+    try:
+        enriched_view(spark, gold, dim, wh).write.format("noop").mode(
+            "overwrite"
+        ).save()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return n_jobs, compiles.METRIC_COMPILATION_TIME().getCount() - c0
+
+
+def test_enriched_view_reuses_classes_and_runs_nine_jobs(spark, tmp_path):
+    """The daily view's fixed cost: a repeated view over a partitioned
+    gold table compiles no new class, also after one more day lands
+    (no per-day literal in a generated class), and runs 9 Spark jobs
+    (emsstat shuffle, one rank table: key counts, histogram, window,
+    two broadcasts; location and weather broadcasts; the write). Rank
+    by rank, the view ran 17."""
+    from enriched_crime_incident_data_pipeline_spark.session import (
+        CODEGEN_CACHE_ENTRIES,
+    )
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_ENTRIES
+    )
+    events = load_table(spark, SF_DIR, "events")
+    silver = dedup_by_key(
+        to_silver(events_as_incidents_raw(events)), "incident_num"
+    ).withColumn("incident_date", F.to_date("incident_ts"))
+    last_day = silver.agg(F.max("incident_date")).first()[0]
+    gold = str(tmp_path / "gold")
+    silver.filter(F.col("incident_date") < last_day).write.partitionBy(
+        "incident_date"
+    ).parquet(gold)
+    dim = synthetic_location_dim(events).localCheckpoint()
+    wh = synthetic_weather_hourly(with_coordinates(silver, dim)).localCheckpoint()
+
+    _view_jobs_and_compiles(spark, gold, dim, wh, "view_warm")
+    assert _view_jobs_and_compiles(spark, gold, dim, wh, "view_again") == (9, 0)
+    silver.filter(F.col("incident_date") == last_day).write.mode(
+        "append"
+    ).partitionBy("incident_date").parquet(gold)
+    assert _view_jobs_and_compiles(spark, gold, dim, wh, "view_next_day") == (9, 0)
 
 
 def test_st21_stream_asof_equals_batch_asof_join(spark):
