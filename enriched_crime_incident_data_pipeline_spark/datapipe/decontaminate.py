@@ -17,7 +17,7 @@ LLM-data-pipeline operator set (BASELINE.json north star).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from enriched_crime_incident_data_pipeline_spark.functions.text import tokens
@@ -136,30 +136,53 @@ def with_contamination_flag(
             .collect()
         )
     )
-    bset = train.sparkSession.sparkContext.broadcast(egrams)
-
-    @F.pandas_udf("int")
-    def _probe(toks_col: pd.Series) -> pd.Series:
-        s = bset.value
-        out = []
-        for toks in toks_col:
-            t = [] if toks is None else list(toks)
-            hit = 0
-            for i in range(max(len(t) - (n - 1), 1)):
-                if " ".join(t[i : i + n]) in s:
-                    hit = 1
-                    break
-            out.append(hit)
-        return pd.Series(out, dtype="int32")
-
+    probe = GramProbe(train.sparkSession.sparkContext, egrams, n)
     cols = train.columns
     # materialize the token array in its own projection first (same
     # reasoning as doc_ngrams: don't re-tokenize per gram position)
     return (
         train.withColumn("_toks", tokens(F.col("text")))
-        .withColumn("contaminated", _probe(F.col("_toks")))
+        .withColumn("contaminated", probe.flag(F.col("_toks")))
         .select(*cols, "contaminated")
     )
+
+
+class GramProbe:
+    """The eval-gram probe of :func:`with_contamination_flag`, built
+    once: ONE broadcast of the gram set and ONE ``pandas_udf`` that
+    flags a token array (0/1, ``int``) when any of its ``n``-grams —
+    or, under ``n`` tokens, the whole sequence — is in the set. A fold
+    that probes every micro-batch builds it once per fold instead of
+    re-broadcasting and re-creating the UDF per batch, and releases
+    the broadcast with :meth:`release` when the fold ends."""
+
+    def __init__(self, sc, grams: frozenset, n: int) -> None:
+        bset = sc.broadcast(grams)
+
+        @F.pandas_udf("int")
+        def _probe(toks_col: pd.Series) -> pd.Series:
+            s = bset.value
+            out = []
+            for toks in toks_col:
+                t = [] if toks is None else list(toks)
+                hit = 0
+                for i in range(max(len(t) - (n - 1), 1)):
+                    if " ".join(t[i : i + n]) in s:
+                        hit = 1
+                        break
+                out.append(hit)
+            return pd.Series(out, dtype="int32")
+
+        self._bset = bset
+        self._udf = _probe
+
+    def flag(self, toks: Column) -> Column:
+        """The 0/1 contamination flag of a token-array column."""
+        return self._udf(toks)
+
+    def release(self) -> None:
+        """Destroy the broadcast; the probe is unusable afterwards."""
+        self._bset.destroy()
 
 
 def bloom_decontaminate(

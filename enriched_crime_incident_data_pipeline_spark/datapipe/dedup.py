@@ -20,6 +20,7 @@ DuckDB twin.
 from __future__ import annotations
 
 import os
+from functools import lru_cache
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -110,6 +111,69 @@ def _shingle_hashes(
     return sh.select(F.col(id_col), hash32(F.col("shingle")).alias("x"))
 
 
+# The row-wise MinHash and banding projections as Spark SQL text,
+# generated once per parameter set from the frozen tables above. A
+# ``selectExpr`` over these strings is ONE py4j call that the JVM
+# parses; the same projections built from Column objects cost ~200
+# py4j constructions per call (the 16 permutation ``transform``
+# lambdas alone ~0.2 s of driver time), paid again by every caller on
+# every call — once per micro-batch in the streaming folds. Strings
+# hold no JVM state, so they stay valid across sessions. Each term is
+# the SQL spelling of its Column twin (``hash32``, ``word_shingles``,
+# ``tokens``); bit-identity with the explode+groupBy formulation and
+# with a plain-Python model is pinned by
+# ``test_minhash_rowwise_matches_grouped`` and
+# ``test_minhash_matches_python_model``.
+def _hash32_sql(x: str) -> str:
+    return f"CAST(conv(substring(md5({x}), 1, 8), 16, 10) AS BIGINT)"
+
+
+@lru_cache(maxsize=16)
+def _minhash_sql(
+    text_col: str, shingle_words: int, num_hashes: int
+) -> tuple[str, tuple[str, ...]]:
+    """``(shingle-hash array, (mh0 term, …))``: the array of distinct
+    shingle hashes of ``text_col`` (to be aliased ``_xs``) and the
+    ``num_hashes`` minima over it."""
+    toks = (
+        f"split(trim(regexp_replace(lower(`{text_col}`), '[^a-z0-9]+', ' ')),"
+        " ' +', -1)"
+    )
+    # word_shingles' let-binding: tokenize once, not once per position
+    shingles = (
+        f"transform(array({toks}), toks -> transform("
+        f"sequence(1, greatest(size(toks) - {shingle_words - 1}, 1)),"
+        f" i -> concat_ws(' ', slice(toks, i, {shingle_words}))))[0]"
+    )
+    xs = f"transform(array_distinct({shingles}), s -> {_hash32_sql('s')})"
+    mins = tuple(f"{minhash_min_sql('_xs', j)} AS mh{j}" for j in range(num_hashes))
+    return xs, mins
+
+
+def minhash_min_sql(xs_col: str, j: int) -> str:
+    """SQL text of minhash_j over ``xs_col``, an array column of
+    shingle hashes: ``min((a_j·x + b_j) mod p)``."""
+    return (
+        f"array_min(transform({xs_col}, x -> ({MINHASH_A[j]} * x"
+        f" + {MINHASH_B[j]}) % {MINHASH_PRIME}))"
+    )
+
+
+@lru_cache(maxsize=16)
+def _bands_sql(num_hashes: int, band_size: int) -> str:
+    """One ``(band_id, band_hash)`` row per band of ``mh0..mh{n-1}``."""
+    structs = []
+    for b in range(num_hashes // band_size):
+        parts = ", ".join(
+            f"CAST(mh{b * band_size + r} AS STRING)" for r in range(band_size)
+        )
+        structs.append(
+            f"named_struct('band_id', {b},"
+            f" 'band_hash', unhex(md5(concat_ws('-', {parts}))))"
+        )
+    return f"inline(array({', '.join(structs)}))"
+
+
 def _banded(sigs: DataFrame, id_col: str, num_hashes: int, band_size: int) -> DataFrame:
     """(id, mh0..mh{n-1}) → one row per (doc, band):
     band_hash = md5 of the '-'-joined minhashes in the band, carried
@@ -120,22 +184,7 @@ def _banded(sigs: DataFrame, id_col: str, num_hashes: int, band_size: int) -> Da
     bucket equality, and therefore every candidate pair, is
     unchanged. Queries that EXPOSE band_hash re-encode with
     ``lower(hex(...))`` at the output boundary (``q_dd2``)."""
-    bands = []
-    for b in range(num_hashes // band_size):
-        cols = [F.col(f"mh{b * band_size + r}") for r in range(band_size)]
-        bands.append(
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.unhex(
-                    F.md5(
-                        F.concat_ws("-", *[c.cast("string") for c in cols])
-                    )
-                ).alias("band_hash"),
-            )
-        )
-    return sigs.select(
-        F.col(id_col), F.explode(F.array(*bands)).alias("band")
-    ).select(id_col, F.col("band.band_id").alias("band_id"), F.col("band.band_hash").alias("band_hash"))
+    return sigs.selectExpr(f"`{id_col}`", _bands_sql(num_hashes, band_size))
 
 
 def minhash_bands(
@@ -176,26 +225,9 @@ def minhash_sigs(
     the shared front half of :func:`minhash_bands`, public so
     estimators (``dd16``) can read the un-banded minima. Map-only,
     stateless (see the banding docstring)."""
-    xs = F.transform(
-        F.array_distinct(word_shingles(F.col(text_col), shingle_words)),
-        lambda s: hash32(s),
-    )
-    hashed = fan_out(docs).select(F.col(id_col), xs.alias("_xs"))
-
-    def perm(j: int):
-        # factory closure: a `lambda x, j=j` would be arity-2 and
-        # PySpark would bind the (element, index) HOF form instead
-        return lambda x: (
-            F.lit(MINHASH_A[j]) * x + F.lit(MINHASH_B[j])
-        ) % MINHASH_PRIME
-
-    return hashed.select(
-        F.col(id_col),
-        *[
-            F.array_min(F.transform(F.col("_xs"), perm(j))).alias(f"mh{j}")
-            for j in range(num_hashes)
-        ],
-    )
+    return with_minhash_cols(
+        fan_out(docs), text_col, shingle_words, num_hashes
+    ).select(id_col, *[f"mh{j}" for j in range(num_hashes)])
 
 
 def with_minhash_cols(
@@ -209,26 +241,13 @@ def with_minhash_cols(
     pipeline materializations that want signatures computed in the
     same pass as other per-row artifacts (corpus_build3's silver cut
     computes sigs + token count + segment hashes in ONE scan instead
-    of three). Same bits as :func:`minhash_sigs`: the shingle-hash
-    array is staged in its own projection so the 16 ``array_min``s
-    share one computation of it, not sixteen."""
-    xs = F.transform(
-        F.array_distinct(word_shingles(F.col(text_col), shingle_words)),
-        lambda s: hash32(s),
-    )
-    staged = docs.select("*", xs.alias("_xs"))
-
-    def perm(j: int):
-        return lambda x: (
-            F.lit(MINHASH_A[j]) * x + F.lit(MINHASH_B[j])
-        ) % MINHASH_PRIME
-
-    return staged.select(
-        *[c for c in docs.columns],
-        *[
-            F.array_min(F.transform(F.col("_xs"), perm(j))).alias(f"mh{j}")
-            for j in range(num_hashes)
-        ],
+    of three; the streaming refresh computes sigs, fingerprint and
+    contamination flag in one pass per micro-batch). The
+    shingle-hash array is staged in its own projection so the 16
+    ``array_min``s share one computation of it, not sixteen."""
+    xs, mins = _minhash_sql(text_col, shingle_words, num_hashes)
+    return (
+        docs.selectExpr("*", f"{xs} AS _xs").selectExpr("*", *mins).drop("_xs")
     )
 
 
@@ -327,15 +346,11 @@ def lsh_candidate_pairs(
     tradeoff on clusters."""
     if pin and not bands.isStreaming:
         bands = _pin(bands)
-    left = bands.select(
-        F.col(id_col).alias("a"), "band_id", "band_hash"
-    )
-    right = bands.select(
-        F.col(id_col).alias("b"), "band_id", "band_hash"
-    )
+    left = bands.selectExpr(f"`{id_col}` AS a", "band_id", "band_hash")
+    right = bands.selectExpr(f"`{id_col}` AS b", "band_id", "band_hash")
     return (
         left.join(right, ["band_id", "band_hash"])
-        .filter(F.col("a") < F.col("b"))
+        .filter("a < b")
         .select("a", "b")
         .distinct()
     )
@@ -1071,14 +1086,12 @@ def incremental_lsh_pairs(
     reproduced exactly (pinned by
     ``test_incremental_lsh_equals_full_restriction``).
     """
-    l = new_bands.select(F.col(id_col).alias("a"), "band_id", "band_hash")
-    r = existing_bands.select(F.col(id_col).alias("b"), "band_id", "band_hash")
+    l = new_bands.selectExpr(f"`{id_col}` AS a", "band_id", "band_hash")
+    r = existing_bands.selectExpr(f"`{id_col}` AS b", "band_id", "band_hash")
     cross = (
         l.join(r, ["band_id", "band_hash"])
-        .filter(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-        )
+        .filter("a != b")
+        .selectExpr("least(a, b) AS a", "greatest(a, b) AS b")
     )
     # pin=False: every caller hands in an already-checkpointed
     # batch-band relation (the foreachBatch paths), so the default

@@ -493,11 +493,9 @@ def q_dd26_shingle_sensitivity(spark, sf_dir):
     # band shuffle, one distinct for all three curve rows.
     from enriched_crime_incident_data_pipeline_spark.datapipe.dedup import (
         BAND_SIZE,
-        MINHASH_A,
-        MINHASH_B,
-        MINHASH_PRIME,
         NUM_HASHES,
         hash32,
+        minhash_min_sql,
     )
     from enriched_crime_incident_data_pipeline_spark.functions.text import (
         shingles_from_tokens,
@@ -525,17 +523,10 @@ def q_dd26_shingle_sensitivity(spark, sf_dir):
         ],
     )
 
-    def perm(j: int):
-        return lambda x: (
-            F.lit(MINHASH_A[j]) * x + F.lit(MINHASH_B[j])
-        ) % MINHASH_PRIME
-
-    sigs = staged.select(
+    sigs = staged.selectExpr(
         "doc_id",
         *[
-            F.array_min(F.transform(F.col(f"_xs{w}"), perm(j))).alias(
-                f"_mh{w}_{j}"
-            )
+            f"{minhash_min_sql(f'_xs{w}', j)} AS _mh{w}_{j}"
             for w in widths
             for j in range(NUM_HASHES)
         ],

@@ -59,6 +59,35 @@ GOLD_TABLE_SCHEMA = T.StructType(
     ]
 )
 
+# The streaming corpus folds' single state relations
+# (``streaming.corpus_refresh`` / ``streaming.corpus_ingest``): the
+# union of every row kind (each kind's unused columns NULL),
+# hive-partitioned by the micro-batch id (``batch=-1`` is the refresh
+# seed). The folds read their state once per micro-batch; with these
+# schemas the read skips the footer job a schema-inferring read runs.
+REFRESH_STATE_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType(), True),
+        T.StructField("band_id", T.IntegerType(), True),
+        T.StructField("band_hash", T.BinaryType(), True),
+        T.StructField("verdict", T.StringType(), True),
+        T.StructField("fingerprint", T.StringType(), True),
+        T.StructField("batch", T.IntegerType(), True),
+    ]
+)
+
+INGEST_STATE_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType(), True),
+        T.StructField("band_id", T.IntegerType(), True),
+        T.StructField("band_hash", T.BinaryType(), True),
+        T.StructField("seg_hash", T.BinaryType(), True),
+        T.StructField("n_kept", T.IntegerType(), True),
+        T.StructField("deduped_text", T.StringType(), True),
+        T.StructField("batch", T.IntegerType(), True),
+    ]
+)
+
 # Geocode cache / dimension (reference src/db/schema.py:37-44; the
 # reserved, never-written `weather` column is kept for parity,
 # TECHNICAL.md:139).

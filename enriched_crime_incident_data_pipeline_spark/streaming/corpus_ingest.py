@@ -62,6 +62,8 @@ from enriched_crime_incident_data_pipeline_spark.datapipe.dedup import (
     minhash_bands,
     rebuild_winners,
 )
+from enriched_crime_incident_data_pipeline_spark.schemas import INGEST_STATE_SCHEMA
+from enriched_crime_incident_data_pipeline_spark.streaming.source import read_state
 
 # r11 (verdict item 1): ONE state relation instead of three. Band
 # rows (every seen doc), surviving segment hashes, and rebuilt corpus
@@ -82,33 +84,33 @@ def _p(state_dir: str, name: str) -> str:
 
 
 def _band_kind(bands: DataFrame) -> DataFrame:
-    return bands.select(
+    return bands.selectExpr(
         "doc_id",
         "band_id",
         "band_hash",
-        F.lit(None).cast("binary").alias("seg_hash"),
-        F.lit(None).cast("int").alias("n_kept"),
-        F.lit(None).cast("string").alias("deduped_text"),
+        "CAST(NULL AS BINARY) AS seg_hash",
+        "CAST(NULL AS INT) AS n_kept",
+        "CAST(NULL AS STRING) AS deduped_text",
     )
 
 
 def _seg_kind(segs: DataFrame) -> DataFrame:
-    return segs.select(
-        F.lit(None).cast("long").alias("doc_id"),
-        F.lit(None).cast("int").alias("band_id"),
-        F.lit(None).cast("binary").alias("band_hash"),
+    return segs.selectExpr(
+        "CAST(NULL AS BIGINT) AS doc_id",
+        "CAST(NULL AS INT) AS band_id",
+        "CAST(NULL AS BINARY) AS band_hash",
         "seg_hash",
-        F.lit(None).cast("int").alias("n_kept"),
-        F.lit(None).cast("string").alias("deduped_text"),
+        "CAST(NULL AS INT) AS n_kept",
+        "CAST(NULL AS STRING) AS deduped_text",
     )
 
 
 def _corpus_kind(rebuilt: DataFrame) -> DataFrame:
-    return rebuilt.select(
+    return rebuilt.selectExpr(
         "doc_id",
-        F.lit(None).cast("int").alias("band_id"),
-        F.lit(None).cast("binary").alias("band_hash"),
-        F.lit(None).cast("binary").alias("seg_hash"),
+        "CAST(NULL AS INT) AS band_id",
+        "CAST(NULL AS BINARY) AS band_hash",
+        "CAST(NULL AS BINARY) AS seg_hash",
         "n_kept",
         "deduped_text",
     )
@@ -163,13 +165,21 @@ def corpus_ingest_batch(
             obs, F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
         )
         state_path = _p(state_dir, _STATE)
-        if os.path.exists(state_path):
-            # the index excludes this batch's own (possibly partial)
-            # earlier attempt — state reads must not see replay debris
-            # — and non-band kinds via the witness column
-            index = spark.read.parquet(state_path).filter(
-                (F.col("batch") != batch_id) & F.col("band_id").isNotNull()
-            ).select("doc_id", "band_id", "band_hash")
+        # ONE state read per batch, under the declared schema (no
+        # footer job); it excludes this batch's own (possibly partial)
+        # earlier attempt — state reads must not see replay debris —
+        # and each consumer picks its kind by the witness column
+        state = (
+            read_state(spark, state_path, INGEST_STATE_SCHEMA).filter(
+                f"batch != {int(batch_id)}"
+            )
+            if os.path.exists(state_path)
+            else None
+        )
+        if state is not None:
+            index = state.filter("band_id IS NOT NULL").select(
+                "doc_id", "band_id", "band_hash"
+            )
             pairs = incremental_lsh_pairs(new_bands, index)
         else:
             # new_bands is already lazily checkpointed above — the
@@ -189,10 +199,8 @@ def corpus_ingest_batch(
         segs = doc_segments(kept_docs, seg_tokens).select(
             "doc_id", "seg_idx", "seg_hash"
         )
-        if os.path.exists(state_path):
-            seen = spark.read.parquet(state_path).filter(
-                (F.col("batch") != batch_id) & F.col("seg_hash").isNotNull()
-            ).select("seg_hash")
+        if state is not None:
+            seen = state.filter("seg_hash IS NOT NULL").select("seg_hash")
             segs = segs.join(seen, "seg_hash", "left_anti")
         kept_segs = keep_first_segment(segs).localCheckpoint(eager=False)
         rebuilt = rebuild_winners(kept_segs, kept_docs, seg_tokens)
@@ -311,7 +319,7 @@ def run_corpus_ingest_stream(
         if prev_aqe is not None:
             spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
     return (
-        spark.read.parquet(_p(state_dir, _STATE))
+        read_state(spark, _p(state_dir, _STATE), INGEST_STATE_SCHEMA)
         .filter(F.col("n_kept").isNotNull())
         .select("doc_id", "n_kept", "deduped_text")
     )

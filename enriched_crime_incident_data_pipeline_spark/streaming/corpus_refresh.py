@@ -10,7 +10,7 @@ stream in id-ordered micro-batches, and each batch is judged against
 
 1. **static old-fingerprint state** — the standing corpus's distinct
    normalized-text md5s, written once at stream start (dc2's
-   mechanism; a semi-join per batch, |old| never rescanned as text);
+   mechanism; a left join per batch, |old| never rescanned as text);
 2. **the growing band index** — seeded with the standing corpus's
    MinHash bands and appended per batch (dd12's mechanism via
    :func:`datapipe.dedup.incremental_lsh_pairs`: batch bands probe
@@ -24,23 +24,38 @@ stream in id-ordered micro-batches, and each batch is judged against
    (pinned by ``test_multimodal_streaming.py`` and the shared
    ``corpus_refresh1`` oracle of ``st28_stream_corpus_refresh``);
 3. **static eval-gram state** — the eval set's 8-gram frozenset,
-   collected ONCE at stream start and re-broadcast per batch (dc6's
-   mechanism: benchmarks are MBs by definition; the stream never
-   shuffles for decontamination).
+   collected ONCE at stream start into one
+   :class:`datapipe.decontaminate.GramProbe` (one broadcast, one
+   ``pandas_udf``) that every batch reuses and the fold releases at
+   its end (dc6's mechanism: benchmarks are MBs by definition; the
+   stream never shuffles for decontamination).
+
+Per micro-batch, each arriving document flows ONCE through every
+probe (the multi-way stream-join pipeline shape): ONE projection over
+the batch text computes its fingerprint, contamination flag and 16
+MinHash minima (``with_minhash_cols``, whose SQL-text expressions are
+generated once, not rebuilt per batch), pinned lazily with the text
+dropped. Its bands (``bands_from_sigs``) probe the index; the state
+is read ONCE per batch under ``schemas.REFRESH_STATE_SCHEMA`` (no
+footer job); and the verdict resolves within the row — left-join the
+seed's fingerprint kind, left-join the near pairs' ``min(a)``, one
+CASE chain — with no union, no group-by over flags and no join-back.
+The batch costs its state write plus the write's broadcast probes:
+three to four Spark jobs.
 
 Unlike the st7 ingest (which rebuilds corpus text), the refresh is a
 pure CLASSIFIER: per batch it writes one verdict row per arriving
 doc plus the batch's bands — ONE union write into the batch's
 ``batch=N`` subdirectory of the single state relation (r11) with
 OVERWRITE, so an at-least-once foreachBatch replay is idempotent
-(st7's effective-exactly-once trick), and state reads exclude the
-replaying batch's own debris.  State size is the band index (∝ docs
-seen × bands/doc, the same artifact dd12 already persists) plus the
-two static side inputs — bounded by index size, never by stream
-length.
+(st7's effective-exactly-once trick), and every state read excludes
+the replaying batch's own directory, which the overwrite is
+deleting.  State size is the band index (∝ docs seen × bands/doc, the
+same artifact dd12 already persists) plus the two static side inputs
+— bounded by index size, never by stream length.
 
 Scale: per batch the only wide ops are the band equi-join against
-the index (65k-value bucket domain), the fingerprint semi-join
+the index (65k-value bucket domain), the fingerprint join
 (broadcast-sized: distinct md5s of the standing corpus), and the
 verdict left-joins over BATCH-sized relations.  The out-of-order
 guard is the st7 id-watermark: bounds ride the band write's
@@ -59,15 +74,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from enriched_crime_incident_data_pipeline_spark.datapipe.dedup import (
+    bands_from_sigs,
     incremental_lsh_pairs,
-    minhash_bands,
+    with_minhash_cols,
 )
 from enriched_crime_incident_data_pipeline_spark.datapipe.decontaminate import (
+    GramProbe,
     doc_ngrams,
-    with_contamination_flag,
 )
 from enriched_crime_incident_data_pipeline_spark.functions.text import (
     doc_fingerprint,
+    tokens,
+)
+from enriched_crime_incident_data_pipeline_spark.schemas import (
+    REFRESH_STATE_SCHEMA,
+)
+from enriched_crime_incident_data_pipeline_spark.streaming.source import (
+    read_state,
 )
 
 # r11 (verdict item 1): ONE state relation instead of three. Band
@@ -93,131 +116,115 @@ def _batch_p(state_dir: str, name: str, batch_id: int) -> str:
     return os.path.join(state_dir, name, f"batch={batch_id}")
 
 
+# the kind projections are SQL text: one py4j call each per batch,
+# where the Column form costs a round trip per function per NULL
 def _band_kind(bands: DataFrame) -> DataFrame:
-    return bands.select(
+    return bands.selectExpr(
         "doc_id",
         "band_id",
         "band_hash",
-        F.lit(None).cast("string").alias("verdict"),
-        F.lit(None).cast("string").alias("fingerprint"),
+        "CAST(NULL AS STRING) AS verdict",
+        "CAST(NULL AS STRING) AS fingerprint",
     )
 
 
 def _verdict_kind(verdicts: DataFrame) -> DataFrame:
-    return verdicts.select(
+    return verdicts.selectExpr(
         "doc_id",
-        F.lit(None).cast("int").alias("band_id"),
-        F.lit(None).cast("binary").alias("band_hash"),
+        "CAST(NULL AS INT) AS band_id",
+        "CAST(NULL AS BINARY) AS band_hash",
         "verdict",
-        F.lit(None).cast("string").alias("fingerprint"),
+        "CAST(NULL AS STRING) AS fingerprint",
     )
 
 
 def _fingerprint_kind(fps: DataFrame) -> DataFrame:
-    return fps.select(
-        F.lit(None).cast("long").alias("doc_id"),
-        F.lit(None).cast("int").alias("band_id"),
-        F.lit(None).cast("binary").alias("band_hash"),
-        F.lit(None).cast("string").alias("verdict"),
+    return fps.selectExpr(
+        "CAST(NULL AS BIGINT) AS doc_id",
+        "CAST(NULL AS INT) AS band_id",
+        "CAST(NULL AS BINARY) AS band_hash",
+        "CAST(NULL AS STRING) AS verdict",
         "fingerprint",
     )
 
 
 def corpus_refresh_batch(
-    state_dir: str, cutoff: int, eval_grams: frozenset, ngram: int = 8
+    state_dir: str, cutoff: int, probe: GramProbe
 ) -> Callable[[DataFrame, int], None]:
     """Build the ``foreachBatch`` function that classifies one
     micro-batch of arriving documents against the refresh state under
     ``state_dir``.  ``cutoff`` is the standing-corpus id boundary
-    (ids < cutoff are the old corpus); ``eval_grams`` is the
-    pre-collected static eval n-gram set."""
+    (ids < cutoff are the old corpus); ``probe`` is the contamination
+    probe over the pre-collected static eval-gram set, built once per
+    fold by its owner, who releases it when the fold ends."""
+    # the per-row probes and aggregates, built once per fold
+    fingerprint = doc_fingerprint(F.col("text")).alias("fingerprint")
+    contaminated = probe.flag(tokens(F.col("text"))).alias("contaminated")
+    id_bounds = (F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
+    min_a = F.min("a").alias("_mina")
+    # exact_dup > near_dup_old > near_dup_new > contaminated > kept;
+    # near_old ⇔ ∃ partner a < cutoff ⇔ min(a) < cutoff
+    verdict = (
+        "CASE WHEN _old THEN 'exact_dup'"
+        f" WHEN _mina < {int(cutoff)} THEN 'near_dup_old'"
+        " WHEN _mina IS NOT NULL THEN 'near_dup_new'"
+        " WHEN contaminated = 1 THEN 'contaminated'"
+        " ELSE 'kept' END AS verdict"
+    )
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         from pyspark.sql import Observation
 
-        batch_df = batch_df.localCheckpoint(eager=False)
-        new_bands = minhash_bands(batch_df).localCheckpoint(eager=False)
+        # ONE pass over the batch text: fingerprint, contamination
+        # flag and the 16 MinHash minima in a single projection,
+        # pinned with the text dropped, so every later consumer (band
+        # probe, verdict, state write) reads (id, fp, flag, 16 longs).
+        # The pin is lazy: the batch's one write job computes it once
+        # (concurrent stages wait on the cached block) and reuses it.
+        # No fan_out: inside foreachBatch the batch is a static frame,
+        # and micro-batch sizing belongs to the source.
+        base = (
+            with_minhash_cols(
+                batch_df.select("doc_id", "text", fingerprint, contaminated)
+            )
+            .drop("text")
+            .localCheckpoint(eager=False)
+        )
+        new_bands = bands_from_sigs(base)
         obs = Observation(f"corpus_refresh_bounds_{batch_id}")
-        bands_out = new_bands.observe(
-            obs, F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
+        bands_out = new_bands.observe(obs, *id_bounds)
+        # ONE state read per batch, under the declared schema (no
+        # footer job). The index always exists (seeded with the old
+        # corpus's bands at stream start); exclude this batch's own
+        # possibly-partial replay debris, and dispatch kinds by the
+        # witness column. The static fingerprint set lives in the
+        # seed directory (batch=-1); IS NOT NULL prunes every other
+        # file by null-count stats.
+        state = read_state(
+            spark, _p(state_dir, _STATE), REFRESH_STATE_SCHEMA
+        ).filter(f"batch != {int(batch_id)}")
+        index = state.filter("band_id IS NOT NULL").select(
+            "doc_id", "band_id", "band_hash"
         )
-        # the index always exists (seeded with the old corpus's bands
-        # at stream start); exclude this batch's own possibly-partial
-        # replay debris, and non-band kinds via the witness column
-        index = (
-            spark.read.parquet(_p(state_dir, _STATE))
-            .filter(
-                (F.col("batch") != batch_id) & F.col("band_id").isNotNull()
-            )
-            .select("doc_id", "band_id", "band_hash")
+        old_fps = state.filter("fingerprint IS NOT NULL").selectExpr(
+            "fingerprint", "true AS _old"
         )
-        pairs = incremental_lsh_pairs(new_bands, index)
-        # r11 (guide §2.4): the verdict used to assemble from FOUR
-        # per-detector relations (two pair DISTINCTs + two more
-        # detectors) left-joined one by one — 2 extra shuffles and 4
-        # joins per batch, all over batch-sized rows where the fixed
-        # per-exchange cost dominates. Now each detector emits
-        # (doc_id, priority) flag rows, ONE min-aggregation resolves
-        # the verdict precedence (exact 1 > near_old 2 > near_new 3 >
-        # contaminated 4), and ONE left join attaches it to the batch.
-        # near_old/near_new collapse into one pass over `pairs`:
-        # near_old ⇔ ∃ partner a < cutoff ⇔ min(a) < cutoff — same
-        # precedence result, half the pair scans, no distincts (the
-        # min-agg dedups).
         near = (
-            pairs.groupBy(F.col("b").alias("doc_id"))
-            .agg(F.min("a").alias("_mina"))
-            .select(
-                "doc_id",
-                F.when(F.col("_mina") < cutoff, F.lit(2))
-                .otherwise(F.lit(3))
-                .alias("p"),
-            )
-        )
-        # the static fingerprint set lives in the seed directory
-        # (batch=-1) as its own kind; IS NOT NULL prunes every other
-        # file by null-count stats
-        old_fps = (
-            spark.read.parquet(_p(state_dir, _STATE))
-            .filter(F.col("fingerprint").isNotNull())
-            .select("fingerprint")
-        )
-        exact_ids = (
-            batch_df.select(
-                "doc_id", doc_fingerprint(F.col("text")).alias("fingerprint")
-            )
-            .join(old_fps, "fingerprint", "left_semi")
-            .select("doc_id", F.lit(1).alias("p"))
-        )
-        contam = (
-            with_contamination_flag(
-                batch_df.select("doc_id", "text"),
-                eval_docs=None,
-                n=ngram,
-                eval_grams=eval_grams,
-            )
-            .filter(F.col("contaminated") == 1)
-            .select("doc_id", F.lit(4).alias("p"))
-        )
-        flags = (
-            exact_ids.unionAll(near)
-            .unionAll(contam)
+            incremental_lsh_pairs(new_bands, index)
+            .withColumnRenamed("b", "doc_id")
             .groupBy("doc_id")
-            .agg(F.min("p").alias("p"))
+            .agg(min_a)
         )
+        # the verdict resolves WITHIN the row: the seed's fingerprints
+        # are distinct by construction and `near` is one row per doc,
+        # so both left joins keep one row per arriving doc, and one
+        # precedence chain picks the verdict
         verdicts = (
-            batch_df.select("doc_id")
-            .join(flags, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.when(F.col("p") == 1, F.lit("exact_dup"))
-                .when(F.col("p") == 2, F.lit("near_dup_old"))
-                .when(F.col("p") == 3, F.lit("near_dup_new"))
-                .when(F.col("p") == 4, F.lit("contaminated"))
-                .otherwise(F.lit("kept"))
-                .alias("verdict"),
-            )
+            base.select("doc_id", "fingerprint", "contaminated")
+            .join(old_fps, "fingerprint", "left")
+            .join(near, "doc_id", "left")
+            .selectExpr("doc_id", verdict)
         )
         # ONE state write per batch (r11): bands + verdicts union into
         # the batch's directory — the union's branches stay separate
@@ -278,10 +285,6 @@ def run_corpus_refresh_stream(
     # the fingerprint and the 16 minhash minima in the same pass,
     # corpus_build3's fusion idiom) instead of once per artifact;
     # eval grams collected ONCE as before
-    from enriched_crime_incident_data_pipeline_spark.datapipe.dedup import (
-        bands_from_sigs,
-        with_minhash_cols,
-    )
     from enriched_crime_incident_data_pipeline_spark.streaming.windows import (
         default_state_partitions,
     )
@@ -302,6 +305,7 @@ def run_corpus_refresh_stream(
     # session conf — the fold restores whatever was set before.
     prev = None
     prev_aqe = None
+    probe = None
     if state_partitions is not None:
         prev = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
@@ -320,12 +324,16 @@ def run_corpus_refresh_stream(
         _band_kind(bands_from_sigs(old_base)).unionByName(
             _fingerprint_kind(old_base.select("fingerprint").distinct())
         ).write.mode("overwrite").parquet(_batch_p(state_dir, _STATE, -1))
-        eval_grams = frozenset(
-            r[0]
-            for r in doc_ngrams(eval_docs, ngram)
-            .select("gram")
-            .distinct()
-            .collect()
+        probe = GramProbe(
+            spark.sparkContext,
+            frozenset(
+                r[0]
+                for r in doc_ngrams(eval_docs, ngram)
+                .select("gram")
+                .distinct()
+                .collect()
+            ),
+            ngram,
         )
         stream = (
             spark.readStream.schema(schema)
@@ -334,7 +342,7 @@ def run_corpus_refresh_stream(
         )
         q = (
             stream.writeStream.foreachBatch(
-                corpus_refresh_batch(state_dir, cutoff, eval_grams, ngram)
+                corpus_refresh_batch(state_dir, cutoff, probe)
             )
             .option(
                 "checkpointLocation", _p(state_dir, f"_ckpt_{uuid.uuid4().hex}")
@@ -344,12 +352,14 @@ def run_corpus_refresh_stream(
         )
         q.awaitTermination()
     finally:
+        if probe is not None:
+            probe.release()
         if prev is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
         if prev_aqe is not None:
             spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
     return (
-        spark.read.parquet(_p(state_dir, _STATE))
+        read_state(spark, _p(state_dir, _STATE), REFRESH_STATE_SCHEMA)
         .filter(F.col("verdict").isNotNull())
         .select("doc_id", "verdict")
     )

@@ -22,6 +22,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def stream_events(
@@ -97,3 +98,11 @@ def stream_table(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(stage)
+
+
+def read_state(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    """Batch read of a streaming fold's parquet state relation under
+    its declared ``schema`` (partition column included): no
+    schema-inference footer job, so a fold that reads its state once
+    per micro-batch runs no extra Spark job for it."""
+    return spark.read.schema(schema).parquet(path)

@@ -525,6 +525,7 @@ def test_stream_corpus_refresh_prefix_stable_and_idempotent(spark, tmp_path):
     import pytest as _pytest
 
     from enriched_crime_incident_data_pipeline_spark.datapipe.decontaminate import (
+        GramProbe,
         doc_ngrams,
     )
     from enriched_crime_incident_data_pipeline_spark.registry.corpus import (
@@ -574,7 +575,8 @@ def test_stream_corpus_refresh_prefix_stable_and_idempotent(spark, tmp_path):
         r[0]
         for r in doc_ngrams(eval_docs, 8).select("gram").distinct().collect()
     )
-    fn = corpus_refresh_batch(state_dir, cutoff, grams)
+    probe = GramProbe(spark.sparkContext, grams, 8)
+    fn = corpus_refresh_batch(state_dir, cutoff, probe)
     last = spark.read.parquet(os.path.join(docs_dir, "b2.parquet"))
     # the AvailableNow run used batch ids 0..2
     fn(last, 2)
@@ -597,6 +599,140 @@ def test_stream_corpus_refresh_prefix_stable_and_idempotent(spark, tmp_path):
     assert not os.path.exists(
         os.path.join(state_dir, "refresh_state", "batch=3")
     )
+
+
+_TINY_CUTOFF = 12
+
+
+def _tiny_refresh(spark, tmp_path):
+    """The refresh fold over 12 standing docs (ids 0-11) and one
+    arriving batch of 8 (ids 12-19). Docs 0 and 1 share one
+    normalized text and arriving doc 12 is a third copy of it; the
+    rest are unrelated. Returns the state dir, the arriving batch,
+    the eval grams and the verdict rows."""
+    import random
+
+    from enriched_crime_incident_data_pipeline_spark.datapipe.decontaminate import (
+        doc_ngrams,
+    )
+    from enriched_crime_incident_data_pipeline_spark.streaming.corpus_refresh import (
+        run_corpus_refresh_stream,
+    )
+
+    rng = random.Random(11)
+    vocab = [f"v{i}" for i in range(400)]
+    rows = [
+        (i, " ".join(rng.choice(vocab) for _ in range(20))) for i in range(20)
+    ]
+    copy = "The quick brown fox jumps over the lazy dog twice"
+    rows[0] = (0, copy)
+    rows[1] = (1, "the QUICK, brown fox -- jumps over the lazy dog twice!")
+    rows[12] = (12, "the quick brown fox jumps over the lazy dog TWICE.")
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    docs_dir = str(tmp_path / "docs")
+    docs.filter(F.col("doc_id") >= _TINY_CUTOFF).coalesce(1).write.parquet(
+        docs_dir
+    )
+    old_docs = docs.filter(F.col("doc_id") < _TINY_CUTOFF)
+    eval_docs = spark.createDataFrame(
+        [(900, " ".join(vocab[:10]))], "doc_id long, text string"
+    )
+    state_dir = str(tmp_path / "state")
+    os.makedirs(state_dir)
+    verdicts = run_corpus_refresh_stream(
+        spark, docs_dir, docs.schema, state_dir, old_docs, eval_docs, _TINY_CUTOFF
+    ).collect()
+    grams = frozenset(
+        r[0] for r in doc_ngrams(eval_docs, 8).select("gram").collect()
+    )
+    batch = spark.read.parquet(docs_dir)
+    return state_dir, batch, grams, verdicts
+
+
+def test_stream_corpus_refresh_exact_dup_is_one_verdict(spark, tmp_path):
+    """Two standing docs with one normalized text plus one arriving
+    copy: the copy gets exactly one verdict row, exact_dup (it is also
+    a near-dup of both, and exact wins), and every other arrival one
+    row each."""
+    _, _, _, verdicts = _tiny_refresh(spark, tmp_path)
+    assert [r["verdict"] for r in verdicts if r["doc_id"] == 12] == ["exact_dup"]
+    assert sorted(r["doc_id"] for r in verdicts) == list(range(12, 20))
+
+
+def test_corpus_refresh_batch_fixed_cost(spark, tmp_path):
+    """A repeated refresh micro-batch (a replay of the same batch,
+    under the fold's conf: AQE off, shuffle partitions pinned) runs at
+    most 4 Spark jobs — the lazily pinned text pass rides the state
+    write, the state read declares its schema, so the rest are the
+    write and its broadcast probes — and compiles no new class."""
+    from enriched_crime_incident_data_pipeline_spark.datapipe.decontaminate import (
+        GramProbe,
+    )
+    from enriched_crime_incident_data_pipeline_spark.streaming.corpus_refresh import (
+        corpus_refresh_batch,
+    )
+
+    state_dir, batch, grams, _ = _tiny_refresh(spark, tmp_path)
+    probe = GramProbe(spark.sparkContext, grams, 8)
+    fn = corpus_refresh_batch(state_dir, _TINY_CUTOFF, probe)
+    sc = spark.sparkContext
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def jobs_and_compiles(group):
+        c0 = compiles.METRIC_COMPILATION_TIME().getCount()
+        sc.setJobGroup(group, group)
+        try:
+            fn(batch, 0)
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        return n_jobs, compiles.METRIC_COMPILATION_TIME().getCount() - c0
+
+    prev = {
+        k: spark.conf.get(k)
+        for k in ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    }
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        jobs_and_compiles("refresh_warm")
+        n_jobs, n_compiles = jobs_and_compiles("refresh_again")
+    finally:
+        probe.release()
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    assert n_jobs <= 4
+    assert n_compiles == 0
+
+
+def test_stream_corpus_folds_write_their_declared_state_schemas(
+    spark, tmp_path
+):
+    """Both corpus folds read their state under a declared schema;
+    what they write (read back with inference) must be exactly it."""
+    from enriched_crime_incident_data_pipeline_spark.schemas import (
+        INGEST_STATE_SCHEMA,
+        REFRESH_STATE_SCHEMA,
+    )
+    from enriched_crime_incident_data_pipeline_spark.streaming.corpus_ingest import (
+        run_corpus_ingest_stream,
+    )
+
+    def fields(schema):
+        return [(f.name, f.dataType) for f in schema]
+
+    state_dir, batch, _, _ = _tiny_refresh(spark, tmp_path / "refresh")
+    written = spark.read.parquet(os.path.join(state_dir, "refresh_state"))
+    assert fields(written.schema) == fields(REFRESH_STATE_SCHEMA)
+
+    ingest_dir = str(tmp_path / "ingest")
+    os.makedirs(ingest_dir)
+    run_corpus_ingest_stream(
+        spark, str(tmp_path / "refresh" / "docs"), batch.schema, ingest_dir
+    )
+    written = spark.read.parquet(os.path.join(ingest_dir, "ingest_state"))
+    assert fields(written.schema) == fields(INGEST_STATE_SCHEMA)
 
 
 def test_frame_dhash_honors_id_col(spark):

@@ -357,6 +357,67 @@ def test_minhash_rowwise_matches_grouped(spark):
     assert "Exchange hashpartitioning(doc_id" not in plan
 
 
+def _minhash_model(text: str, a, b, p: int, shingle_words=3, band_size=4):
+    """Plain-Python MinHash of one document: normalize, tokenize,
+    3-word shingles (a short document is one shingle of all its
+    tokens), md5-prefix hash32, ``(a·x + b) mod p`` minima, and each
+    band's md5 over the '-'-joined minima as raw bytes."""
+    import hashlib
+    import re
+
+    norm = re.sub(r"[^a-z0-9]+", " ", text.lower()).strip()
+    toks = re.split(r" +", norm)
+    n_sh = max(len(toks) - (shingle_words - 1), 1)
+    shingles = {" ".join(toks[i : i + shingle_words]) for i in range(n_sh)}
+    xs = [int(hashlib.md5(s.encode()).hexdigest()[:8], 16) for s in shingles]
+    sigs = tuple(min((aj * x + bj) % p for x in xs) for aj, bj in zip(a, b))
+    bands = {
+        (k, hashlib.md5("-".join(map(str, sigs[k * band_size : (k + 1) * band_size])).encode()).digest())
+        for k in range(len(sigs) // band_size)
+    }
+    return sigs, bands
+
+
+def test_minhash_matches_python_model(spark):
+    """minhash_sigs, with_minhash_cols and minhash_bands (row-wise,
+    built from SQL text) equal a plain-Python model bit for bit,
+    including a document shorter than 3 tokens and an empty text."""
+    import random
+
+    from enriched_crime_incident_data_pipeline_spark.datapipe.dedup import (
+        MINHASH_A,
+        MINHASH_B,
+        MINHASH_PRIME,
+        minhash_bands,
+        minhash_sigs,
+        with_minhash_cols,
+    )
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(60)] + ["Alpha", "beta-gamma", "x.y"]
+    rows = [
+        (i, " ".join(rng.choice(vocab) for _ in range(rng.randint(3, 40))))
+        for i in range(18)
+    ]
+    rows += [(100, "Two words!"), (101, "")]
+    docs = _docs(spark, rows).withColumn("tag", F.lit("t"))
+    model = {
+        i: _minhash_model(t, MINHASH_A, MINHASH_B, MINHASH_PRIME) for i, t in rows
+    }
+
+    sigs = {r[0]: tuple(r[1:]) for r in minhash_sigs(docs).collect()}
+    assert sigs == {i: m[0] for i, m in model.items()}
+    appended = with_minhash_cols(docs)
+    assert appended.columns == docs.columns + [f"mh{j}" for j in range(16)]
+    assert {r[0]: tuple(r[3:]) for r in appended.collect()} == sigs
+    bands = {}
+    for r in minhash_bands(docs).collect():
+        bands.setdefault(r["doc_id"], set()).add(
+            (r["band_id"], bytes(r["band_hash"]))
+        )
+    assert bands == {i: m[1] for i, m in model.items()}
+
+
 def test_seed_lm_scores_out_of_domain_scores_higher(spark):
     """ta14: docs made of tokens the seed never saw take the smoothed
     maximum term (N+V)/1; seed-like docs score strictly lower."""
