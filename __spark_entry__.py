@@ -18,11 +18,19 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from enriched_crime_incident_data_pipeline_spark import registry
+from enriched_crime_incident_data_pipeline_spark.session import LOADER_CONF
+
+
+def _pin_loader_conf(spark: SparkSession) -> None:
+    """The conf get_spark pins and the table loaders read; the driver
+    hands in a session of its own."""
+    for k, v in LOADER_CONF.items():
+        spark.conf.set(k, v)
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _pin_loader_conf(spark)
     return registry.q_flagship(spark, "/root/testdata/sf0.001")
 
 
@@ -31,7 +39,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def wrap(fn):
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            spark.conf.set("spark.sql.session.timeZone", "UTC")
+            _pin_loader_conf(spark)
             return fn(spark, sf_dir)
 
         return run

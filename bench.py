@@ -5,7 +5,14 @@
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {name: sec, ...}, "jobs": {name: Spark jobs, ...},
+   "py4j_calls": {name: py4j calls, ...},
    "codegen_compiles": <Janino compiles over the timed runs>, "sf": <float>}
+
+``jobs`` and ``py4j_calls`` describe each query's last timed run.
+``py4j_calls`` counts the Python→JVM round trips (calls of py4j's
+``ClientServerConnection.send_command``) from building the query's
+plan through the end of its write: the driver-side plan-building cost
+that wall time at small scale factors mostly is.
 
 Each query is materialized fully via the ``noop`` sink (no driver
 collect, no disk write) — measures plan execution, the thing that
@@ -24,7 +31,25 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from py4j.clientserver import ClientServerConnection
+
 from enriched_crime_incident_data_pipeline_spark import get_spark, registry
+
+
+class _Py4jCalls:
+    """Counts py4j round trips by wrapping the one method every
+    Python→JVM call goes through (pinned-thread client server)."""
+
+    def __init__(self) -> None:
+        self.n = 0
+        send = ClientServerConnection.send_command
+
+        def counted(conn, *args, **kwargs):
+            self.n += 1
+            return send(conn, *args, **kwargs)
+
+        ClientServerConnection.send_command = counted
+
 
 HEADLINE = [
     "flagship_enriched_report",
@@ -459,6 +484,8 @@ def main() -> None:
     sc = spark.sparkContext
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     jobs: dict[str, int] = {}
+    py4j = _Py4jCalls()
+    py4j_calls: dict[str, int] = {}
     runs = itertools.count()
 
     def _run_once(name: str) -> float:
@@ -466,9 +493,10 @@ def main() -> None:
         # (a streaming query's jobs carry its own group, not this one)
         group = f"bench-{next(runs)}"
         sc.setJobGroup(group, name)
-        t0 = time.time()
+        t0, calls0 = time.time(), py4j.n
         qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
         dt = time.time() - t0
+        py4j_calls[name] = py4j.n - calls0
         sc._jsc.clearJobGroup()
         spark.catalog.clearCache()
         sc._jsc.sc().listenerBus().waitUntilEmpty()
@@ -510,6 +538,7 @@ def main() -> None:
         "longtail_total": round(sum(longtail.values()), 3),
         # Spark jobs of one run of each query (its last timed run)
         "jobs": {n: jobs[n] for n in HEADLINE + LONGTAIL},
+        "py4j_calls": {n: py4j_calls[n] for n in HEADLINE + LONGTAIL},
         "codegen_compiles": compiles,
         "sf": sf,
         "host": {

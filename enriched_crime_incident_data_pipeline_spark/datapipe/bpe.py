@@ -65,6 +65,7 @@ from pyspark.sql import functions as F
 
 from enriched_crime_incident_data_pipeline_spark.datapipe.dedup import hash32
 from enriched_crime_incident_data_pipeline_spark.functions.text import tokens
+from enriched_crime_incident_data_pipeline_spark.session import local_frame
 
 SEP = "\x1f"
 
@@ -353,7 +354,8 @@ def _train(
                 )
                 pending = []
     sym = _apply_rules_kernel(base, pending) if pending else base
-    merges = spark.createDataFrame(
+    merges = local_frame(
+        spark,
         rows, "it int, ma string, mb string, cnt bigint"
     )
     return sym0, sym, merges
@@ -372,7 +374,8 @@ def apply_merges(
         )
     for r in merge_rows:
         pair = F.broadcast(
-            sym.sparkSession.createDataFrame(
+            local_frame(
+                sym.sparkSession,
                 [(r["ma"], r["mb"])], "ma string, mb string"
             )
         )
@@ -569,7 +572,8 @@ def learn_bpe_merges_chars(
     :func:`learn_bpe_merges`."""
     spark = docs.sparkSession
     _, rows = _train_chars(docs, iters, text_col, apply_last=False)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "it int, a string, b string, cnt bigint"
     )
 

@@ -54,6 +54,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from enriched_crime_incident_data_pipeline_spark.session import local_frame
+
 # localCheckpoint cadence: truncates iterate lineage so plan size is
 # bounded by the cadence, not the round count
 _CHECKPOINT_EVERY = 4
@@ -226,7 +228,8 @@ def connected_components(
                 StructField("cluster_id", node_t),
             ]
         )
-        return edges.sparkSession.createDataFrame(
+        return local_frame(
+            edges.sparkSession,
             [(n, find(n)) for n in sorted(parent)], out_schema
         )
     if n_edges <= small_graph_edges:
@@ -421,7 +424,8 @@ def label_propagation_communities(
         if len(head) <= cap:
             lab = _lpa_local(head, rounds)
             node_t = e_proj.schema["v"].dataType
-            return edges.sparkSession.createDataFrame(
+            return local_frame(
+                edges.sparkSession,
                 sorted(lab.items()),
                 StructType(
                     [
@@ -524,7 +528,8 @@ def k_core(
             node_t = e_proj.schema["a"].dataType
             from pyspark.sql.types import LongType
 
-            return edges.sparkSession.createDataFrame(
+            return local_frame(
+                edges.sparkSession,
                 _kcore_local(head, k, rounds),
                 StructType(
                     [
@@ -709,7 +714,8 @@ def strongly_connected_components(
     if cap > 0:
         head = e_proj.take(cap + 1)
         if len(head) <= cap:
-            return edges.sparkSession.createDataFrame(
+            return local_frame(
+                edges.sparkSession,
                 _scc_local(head),
                 StructType(
                     [

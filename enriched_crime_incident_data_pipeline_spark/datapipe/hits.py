@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from enriched_crime_incident_data_pipeline_spark.datapipe.clusters import (
     DRIVER_GRAPH_EDGES,
 )
+from enriched_crime_incident_data_pipeline_spark.session import local_frame
 
 
 def _hits_local(head, iters: int, members: set) -> list:
@@ -123,7 +124,8 @@ def hits_scores(
             if nodes_cover_edges:
                 members = set(srcs)
             elif srcs:
-                src_df = spark.createDataFrame(
+                src_df = local_frame(
+                    spark,
                     [(s,) for s in srcs],
                     StructType([StructField("id", node_t)]),
                 )
@@ -134,7 +136,8 @@ def hits_scores(
                     ).collect()
                 }
             rows = _hits_local(head, iters, members)
-            local = spark.createDataFrame(
+            local = local_frame(
+                spark,
                 rows,
                 StructType(
                     [

@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from enriched_crime_incident_data_pipeline_spark.datapipe.clusters import (
     DRIVER_GRAPH_EDGES,
 )
+from enriched_crime_incident_data_pipeline_spark.session import local_frame
 
 ALPHA = 0.15
 
@@ -220,7 +221,8 @@ def pagerank(
                 if need_n:
                     n_nodes_i = nodes.count()
             elif eps:
-                ep_df = edges.sparkSession.createDataFrame(
+                ep_df = local_frame(
+                    edges.sparkSession,
                     [(x,) for x in eps],
                     StructType([StructField("id", node_t)]),
                 )
@@ -259,7 +261,8 @@ def pagerank(
             ranks_d, bg, _ = _pagerank_local(
                 head, iters, alpha, tol, dangling, n_nodes_i, stats, members
             )
-            local = edges.sparkSession.createDataFrame(
+            local = local_frame(
+                edges.sparkSession,
                 sorted(ranks_d.items()),
                 StructType(
                     [
@@ -423,7 +426,8 @@ def personalized_pagerank(
             members: set = set(eps)
             ep_df = None
             if eps:
-                ep_df = edges.sparkSession.createDataFrame(
+                ep_df = local_frame(
+                    edges.sparkSession,
                     [(x,) for x in eps],
                     StructType([StructField("id", node_t)]),
                 )
@@ -445,7 +449,8 @@ def personalized_pagerank(
             ranks_d, seed_bg, nonseed_bg = _ppr_local(
                 head, iters, alpha, members, seed_eps
             )
-            local = edges.sparkSession.createDataFrame(
+            local = local_frame(
+                edges.sparkSession,
                 sorted(ranks_d.items()),
                 StructType(
                     [

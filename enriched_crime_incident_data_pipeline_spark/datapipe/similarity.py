@@ -20,6 +20,7 @@ from enriched_crime_incident_data_pipeline_spark.functions.vectors import (
     cosine_from_norms,
     l2_norm,
 )
+from enriched_crime_incident_data_pipeline_spark.session import local_frame
 
 
 def brute_force_neighbors(
@@ -278,7 +279,8 @@ def train_kmeans_centroids(
     """
     dim_df = embeddings.select(F.size(vec_col).alias("d")).limit(1).collect()
     if not dim_df:
-        return embeddings.sparkSession.createDataFrame(
+        return local_frame(
+            embeddings.sparkSession,
             [], "cluster int, centroid array<double>"
         )
     dim = dim_df[0]["d"]
@@ -294,7 +296,8 @@ def train_kmeans_centroids(
         F.col(id_col), F.col(vec_col), l2_norm(F.col(vec_col)).alias("_vn")
     )
     for _ in range(iterations):
-        cent_df = embeddings.sparkSession.createDataFrame(
+        cent_df = local_frame(
+            embeddings.sparkSession,
             [(c, v) for c, v in centroids.items()],
             "_cid int, _cvec array<double>",
         ).select("_cid", "_cvec", l2_norm(F.col("_cvec")).alias("_cn"))
@@ -328,7 +331,8 @@ def train_kmeans_centroids(
             n = row["_n"]
             if n:
                 centroids[row["_cid"]] = [row[f"_s{i}"] / n for i in range(dim)]
-    return embeddings.sparkSession.createDataFrame(
+    return local_frame(
+        embeddings.sparkSession,
         [(c, v) for c, v in sorted(centroids.items())],
         "cluster int, centroid array<double>",
     )
@@ -918,7 +922,8 @@ def mmr_topk(
                 best = (key, cid, cos_q, mmr)
         selected.append((best[1], best[3]))
         out_rows.append((best[1], rank, best[2], best[3]))
-    return embeddings.sparkSession.createDataFrame(
+    return local_frame(
+        embeddings.sparkSession,
         out_rows, "neighbor_id bigint, rank int, cosine double, mmr double"
     )
 

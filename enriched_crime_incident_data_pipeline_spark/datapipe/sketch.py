@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from enriched_crime_incident_data_pipeline_spark.datapipe.dedup import hash32
+from enriched_crime_incident_data_pipeline_spark.session import local_frame
 
 KMV_K = 256
 
@@ -428,7 +429,8 @@ def histogram_quantile_readout(
     cum_w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
     cum = buckets.withColumn("cum", F.sum("cnt").over(cum_w))
     total = buckets.agg(F.sum("cnt").alias("n_total"))
-    qrows = spark.createDataFrame(
+    qrows = local_frame(
+        spark,
         [(int(qn), int(qd)) for qn, qd in qs], "q_num int, q_den int"
     )
     ks = qrows.crossJoin(F.broadcast(total)).withColumn(

@@ -61,6 +61,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from enriched_crime_incident_data_pipeline_spark.functions.text import tokens
+from enriched_crime_incident_data_pipeline_spark.session import local_frame
 
 MAX_PIECE_LEN = 4
 
@@ -231,7 +232,8 @@ def learn_unigram_vocab(
     _, counts = _train_counts(docs, text_col, seed_k, rounds, max_len)
     final = _prune(counts, keep_k)
     spark = docs.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(p, c, len(p)) for p, c in sorted(final.items())],
         "piece string, cnt bigint, nchars int",
     )

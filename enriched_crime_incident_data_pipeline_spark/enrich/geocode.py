@@ -12,8 +12,10 @@ Spark design: cache probe = left-anti join (J3); the external call is
 a pluggable provider. The live-provider path MUST stay serialized
 (1 req/s politeness) — so providers run on the driver over the
 collected miss list, never as a parallel UDF. Miss lists are tiny by
-construction (distinct new locations per run). The default provider is
-a deterministic fixture for hermetic tests.
+construction (distinct new locations per run), and ``resolve_misses``
+returns them as a local relation (``session.local_frame``): the cache
+write reads them with no Python worker task and no job of their own.
+The default provider is a deterministic fixture for hermetic tests.
 """
 
 from __future__ import annotations
@@ -24,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from enriched_crime_incident_data_pipeline_spark.schemas import LOCATION_SCHEMA
+from enriched_crime_incident_data_pipeline_spark.session import local_frame
 
 
 class Geocoder(Protocol):
@@ -69,12 +72,12 @@ def resolve_misses(
 
     Serialized on the driver on purpose: the live Nominatim provider
     is rate-limited to 1 req/s — a parallel UDF fan-out would violate
-    it (SURVEY.md §4). Returns rows in LOCATION_SCHEMA."""
+    it (SURVEY.md §4). Returns a local relation in LOCATION_SCHEMA."""
     rows = [
         (m["loc"], *provider.geocode(m["loc"]), None)
         for m in misses.collect()
     ]
-    return spark.createDataFrame(rows, LOCATION_SCHEMA)
+    return local_frame(spark, rows, LOCATION_SCHEMA)
 
 
 def update_cache(cache: DataFrame, resolved: DataFrame) -> DataFrame:

@@ -23,6 +23,8 @@ import datetime as dt
 
 from pyspark.sql import DataFrame, SparkSession
 
+from enriched_crime_incident_data_pipeline_spark.session import local_frame
+
 ENDPOINT = "https://archive-api.open-meteo.com/v1/archive"
 TIMEOUT_S = 10.0
 RETRIES = 5
@@ -102,4 +104,4 @@ def fetch_weather_hourly(
             rows.append(
                 (r["latitude"], r["longitude"], r["date"], hour, int(code))
             )
-    return spark.createDataFrame(rows, _WH_SCHEMA)
+    return local_frame(spark, rows, _WH_SCHEMA)

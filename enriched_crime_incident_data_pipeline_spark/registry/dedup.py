@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from enriched_crime_incident_data_pipeline_spark.datapipe.dedup import (embedding_near_dup_pairs, exact_duplicate_groups, lsh_candidate_pairs, minhash_bands, ngram_jaccard_pairs, simhash_signatures)
 from enriched_crime_incident_data_pipeline_spark.functions.text import token_count, tokens
+from enriched_crime_incident_data_pipeline_spark.session import local_frame
 from enriched_crime_incident_data_pipeline_spark.sources.catalog import load_table
 
 from enriched_crime_incident_data_pipeline_spark.registry._shared import (
@@ -588,7 +589,7 @@ def q_dd26_shingle_sensitivity(spark, sf_dir):
     # a width with zero candidate pairs must still emit its (w, 0, 0)
     # row (the per-width aggs of the r9 shape did) — left-join the
     # 3-row width frame
-    wd = spark.createDataFrame([(w,) for w in widths], "w int")
+    wd = local_frame(spark, [(w,) for w in widths], "w int")
     return (
         wd.join(pc_, "w", "left")
         .join(ids, "w", "left")

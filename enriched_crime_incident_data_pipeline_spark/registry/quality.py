@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 from enriched_crime_incident_data_pipeline_spark.sources.catalog import load_table
+from enriched_crime_incident_data_pipeline_spark.session import local_frame
 
 from enriched_crime_incident_data_pipeline_spark.registry._shared import (
     _KS_DRIFT_SQL,
@@ -638,7 +639,8 @@ def q_dq5_ri_audit(spark, sf_dir):
         StructType,
     )
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         StructType(
             [

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from enriched_crime_incident_data_pipeline_spark.datapipe.dedup import hash32, minhash_bands
 from enriched_crime_incident_data_pipeline_spark.datapipe.similarity import ivf_assignments
 from enriched_crime_incident_data_pipeline_spark.functions.text import tokens
+from enriched_crime_incident_data_pipeline_spark.session import local_frame
 from enriched_crime_incident_data_pipeline_spark.sources.catalog import load_table
 
 from enriched_crime_incident_data_pipeline_spark.registry._shared import (
@@ -41,7 +42,8 @@ def q_st3_stream_static_join(spark, sf_dir):
         stream_events,
     )
 
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [("click", 1), ("view", 2), ("error", 3), ("purchase", 4), ("signup", 5)],
         "event_type string, w int",
     )
@@ -1277,8 +1279,8 @@ def q_st29_stream_schema_drift(spark, sf_dir):
     state = run_available_now(
         counts, "st29_schema_drift", "complete"
     )
-    rows1 = spark.createDataFrame([(rows1_val,)], "_rows1 bigint")
-    rows2 = spark.createDataFrame([(rows2_val,)], "_rows2 bigint")
+    rows1 = local_frame(spark, [(rows1_val,)], "_rows1 bigint")
+    rows2 = local_frame(spark, [(rows2_val,)], "_rows2 bigint")
     return drift_from_type_counts(state, rows1, rows2)
 
 

@@ -6,15 +6,32 @@ ship on a real cluster: AQE on (runtime re-planning, skew-join
 handling, partition coalescing), UTC session timezone (parity with the
 DuckDB oracle and with the reference's naive timestamps), Arrow
 enabled for the few pandas-UDF paths.
+
+Driver-side rows (geocode results, graph-tier answers, parameter
+tables) become relations through :func:`local_frame`, never through
+``createDataFrame(<python list>)``.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _make_type_verifier
 
 CODEGEN_CACHE_ENTRIES = 2000
+
+# Session conf the table loaders read and never set: the UTC pin keeps
+# timestamps in parity with the DuckDB oracles, and nanosAsLong lets a
+# stored TIMESTAMP(NANOS) parquet column read as a long, which the
+# loaders convert to micro-precision timestamps. get_spark pins both;
+# a session built elsewhere pins them before loading (__spark_entry__).
+LOADER_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
 
 
 def get_spark(
@@ -76,15 +93,55 @@ def get_spark(
         # applies, median cpu_s went 11.1 -> 10.3 CPU-s over 5 pairs,
         # within noise; peak memory did not move).
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
-        .config("spark.sql.session.timeZone", "UTC")
+        # PySpark's DataFrame query-context capture wraps every
+        # `functions`/Column call in an active-session lookup, a conf
+        # read, a stack walk and PySparkCurrentOrigin set/clear py4j
+        # calls. On the e2ebench daily_reports workload (seed 3001,
+        # 4 cores) the enriched view made a median 1 575 py4j calls a
+        # day with it and 881 without, the stream ingest 504 and 305.
+        # Errors still raise with their message and Python traceback;
+        # only the DataFrame call-site fragment of the message is
+        # lost. PySpark reads this conf once per process, at the first
+        # Column call, so it is set on the builder.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
+    for k, v in LOADER_CONF.items():
+        builder = builder.config(k, v)
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: StructType | str
+) -> DataFrame:
+    """Driver-side ``rows`` (tuples in field order) as a relation under
+    ``schema`` (a ``StructType`` or a DDL string).
+
+    The rows go through the same type verifier as
+    ``createDataFrame(<list>)`` (a ``None`` in a non-nullable field,
+    an int out of its type's range, a value of the wrong type all
+    raise), then into one pyarrow Table. A Table plans as a
+    ``LocalTableScan``: no PythonRDD, so no Python worker task and no
+    Spark job each time the relation is read, where a list plans as a
+    ``Scan ExistingRDD`` that runs one Python task per default
+    partition."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    verify = _make_type_verifier(schema)
+    for row in rows:
+        verify(row)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

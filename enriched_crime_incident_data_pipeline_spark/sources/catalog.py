@@ -13,6 +13,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from enriched_crime_incident_data_pipeline_spark.session import LOADER_CONF
+
 TABLES = [
     "region",
     "nation",
@@ -46,15 +48,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # the NTZ branch of as_micros_timestamp interprets wall-clock
         # values in the session timezone at execution time; a session
         # missing the UTC pin would silently diverge from the DuckDB
-        # oracles, so fail loudly here instead
-        tz = spark.conf.get("spark.sql.session.timeZone")
-        if tz != "UTC":
-            raise ValueError(
-                f"load_table({name!r}) requires "
-                f"spark.sql.session.timeZone=UTC (got {tz!r}); "
-                "use get_spark() or pin the conf before loading"
-            )
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # oracles, and one without nanosAsLong cannot read a NANOS
+        # column at all. get_spark() pins both; loading reads the
+        # session conf and never changes it.
+        for key, want in LOADER_CONF.items():
+            got = spark.conf.get(key, None)
+            if got != want:
+                raise ValueError(
+                    f"load_table({name!r}) requires {key}={want} "
+                    f"(got {got!r}); use get_spark() or pin the conf "
+                    "before loading"
+                )
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     for c in ts_cols:
         df = df.withColumn(c, as_micros_timestamp(df, c))

@@ -30,9 +30,10 @@ def stream_events(
 ) -> DataFrame:
     """events.parquet as a streaming DataFrame (ts converted from
     stored nanos to micro-precision timestamps, as in the batch
-    loader)."""
+    loader; reading stored nanos needs the session's
+    ``spark.sql.legacy.parquet.nanosAsLong``, which ``get_spark``
+    pins)."""
     path = os.path.join(sf_dir, "events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(path).schema
     # the file source streams *directories* (new files appear, the
     # checkpoint tracks which were seen); the testdata table is a bare

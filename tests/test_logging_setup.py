@@ -12,29 +12,11 @@ import pytest
 from enriched_crime_incident_data_pipeline_spark.logging_setup import (
     BACKUP_COUNT,
     MAX_BYTES,
-    clear_configured_flag,
     setup_logging,
 )
 
 
-@pytest.fixture(autouse=True)
-def _isolated_logging():
-    """Snapshot/restore root handlers: only handlers ADDED by the
-    test are closed, so pytest's own capture handlers survive."""
-    root = logging.getLogger()
-    saved_handlers = list(root.handlers)
-    saved_level = root.level
-    clear_configured_flag()
-    yield
-    for h in list(root.handlers):
-        if h not in saved_handlers:
-            root.removeHandler(h)
-            h.close()
-    for h in saved_handlers:
-        if h not in root.handlers:
-            root.addHandler(h)
-    root.setLevel(saved_level)
-    clear_configured_flag()
+pytestmark = pytest.mark.usefixtures("isolated_logging")
 
 
 def test_setup_writes_rotating_file_and_console(tmp_path):

@@ -153,7 +153,7 @@ def test_adapter_pipeline_on_driver_testdata(spark):
     assert health["null_side_of_town"] == 0
 
 
-def test_cli_report_and_export(spark, tmp_path, capsys):
+def test_cli_report_and_export(spark, tmp_path, capsys, isolated_logging):
     """python -m enriched_crime_incident_data_pipeline_spark mirrors the
     reference's two entry points: 9-col TSV report (main.py) and CSV
     export (temp.py)."""
@@ -178,7 +178,7 @@ def test_cli_report_and_export(spark, tmp_path, capsys):
     )
 
 
-def test_cli_list_run_explain(spark, capsys):
+def test_cli_list_run_explain(spark, capsys, isolated_logging):
     """The exploration subcommands: `list` enumerates the registry,
     `run` prints rows, `explain` prints the physical plan, unknown
     names fail with a usable error."""

@@ -137,3 +137,23 @@ def test_readme_query_count_matches_registry():
         f"README query counts {sorted(counts)} != registry size {n} — "
         "update README.md's two count mentions"
     )
+
+
+def test_driver_rows_go_through_local_frame():
+    """Driver-side rows become relations only through
+    ``session.local_frame``: ``createDataFrame(<python list>)`` plans a
+    PythonRDD that runs one Python worker task per default partition
+    every time the relation is read, so no other ``createDataFrame(``
+    call may come back into the package unseen."""
+    import re
+
+    package = REGISTRY_DIR.parent
+    calls = {
+        str(p.relative_to(package)): n
+        for p in sorted(package.rglob("*.py"))
+        if (n := len(re.findall(r"\.createDataFrame\(", p.read_text())))
+    }
+    assert calls == {"session.py": 1}, (
+        f"createDataFrame( calls outside session.local_frame: {calls} — "
+        "build driver-side rows with local_frame(spark, rows, schema)"
+    )

@@ -5,7 +5,10 @@ answers to the reference's positional row patching
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
+
+SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_parquet_merge_schema_unions_columns(spark, tmp_path):
@@ -189,3 +192,48 @@ def test_write_spool_file_rejects_empty_poll(tmp_path):
 
     with _pytest.raises(ValueError, match="empty poll"):
         write_spool_file(str(tmp_path / "spool"), [])
+
+
+def test_load_table_leaves_session_conf_unchanged(spark, monkeypatch):
+    """Loading a table reads the session conf get_spark pinned and
+    writes none: a later query of the same session sees the conf it
+    saw before the load."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from enriched_crime_incident_data_pipeline_spark.sources.catalog import (
+        load_table,
+    )
+    from enriched_crime_incident_data_pipeline_spark.streaming import (
+        stream_events,
+    )
+
+    writes = []
+    real_set = RuntimeConfig.set
+
+    def spy(self, key, value):
+        writes.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    before = spark.conf.getAll
+    events = load_table(spark, SF_DIR, "events")
+    stream = stream_events(spark, SF_DIR)
+    assert events.schema["ts"].dataType.typeName() == "timestamp"
+    assert stream.schema["ts"].dataType.typeName() == "timestamp"
+    assert writes == []
+    assert spark.conf.getAll == before
+
+
+def test_load_table_fails_loudly_without_the_loader_conf(spark):
+    from enriched_crime_incident_data_pipeline_spark.sources.catalog import (
+        load_table,
+    )
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        with pytest.raises(ValueError, match="nanosAsLong"):
+            load_table(spark, SF_DIR, "events")
+    finally:
+        spark.conf.set(key, saved)
