@@ -16,9 +16,10 @@ Spark-native twin:
 Inputs are the driver's parquet fixtures (the events table adapted
 into the incidents-raw shape, with deterministic geocode/weather
 lookup fixtures standing in for the rate-limited live services, as
-the engine's provider design intends).  Both commands execute ONE
-lazy DataFrame DAG — bronze → silver → dedup+EMSSTAT → ranks →
-coordinates → side-of-town → weather — and differ only in the sink.
+the engine's provider design intends).  Both commands run the
+flagship query's own assembly (``registry.crime.enriched_incidents``:
+bronze → silver → dedup+EMSSTAT → ranks → coordinates → side-of-town
+→ weather) and differ only in the sink.
 """
 
 from __future__ import annotations
@@ -27,39 +28,9 @@ import argparse
 import logging
 import sys
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 log = logging.getLogger("enriched_crime_incident_data_pipeline_spark")
-
-
-def _build_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full §3.1 pipeline over the fixture tables: returns the
-    enriched incidents DataFrame (all columns, pre-projection)."""
-    from enriched_crime_incident_data_pipeline_spark.operators.emsstat import (
-        dedup_and_propagate,
-    )
-    from enriched_crime_incident_data_pipeline_spark.enrich.geocode import (
-        with_coordinates,
-    )
-    from enriched_crime_incident_data_pipeline_spark.operators.derive import (
-        to_silver,
-    )
-    from enriched_crime_incident_data_pipeline_spark.plans import (
-        events_as_incidents_raw,
-        synthetic_location_dim,
-        synthetic_weather_hourly,
-    )
-    from enriched_crime_incident_data_pipeline_spark.plans.pipeline import (
-        enrich_after_emsstat,
-    )
-    from enriched_crime_incident_data_pipeline_spark.sources import load_table
-
-    events = load_table(spark, sf_dir, "events")
-    silver = to_silver(events_as_incidents_raw(events))
-    base = dedup_and_propagate(silver).persist()
-    dim = synthetic_location_dim(events)
-    wh = synthetic_weather_hourly(with_coordinates(base, dim))
-    return enrich_after_emsstat(base, dim, wh)
 
 
 def _log_health(enriched: DataFrame) -> None:
@@ -155,8 +126,12 @@ def main(argv: list[str] | None = None) -> int:
             df.explain(mode=args.mode)
         return 0
 
+    from enriched_crime_incident_data_pipeline_spark.registry.crime import (
+        enriched_incidents,
+    )
+
     spark = get_spark(app_name=f"pipeline-{args.command}")
-    enriched = _build_enriched(spark, args.sf_dir)
+    enriched = enriched_incidents(spark, args.sf_dir)
 
     if args.command == "report":
         _log_health(enriched)

@@ -16,7 +16,9 @@ Implementation — two physical strategies behind one contract:
    shuffle the whole edge list to ONE task and run path-compressed
    union-by-min union-find. One Spark job total, versus ~8 rounds ×
    fixed job overhead that dominated the round-3 bench
-   (``dd14_semdedup`` 17.8 s was ≈ all CC barrier cost).
+   (``dd14_semdedup`` 17.8 s was ≈ all CC barrier cost). Below
+   ``graph_tier.DRIVER_GRAPH_EDGES`` the same union-find runs at the
+   driver instead, with no kernel job at all.
 2. LARGE graphs: iterative min-label propagation with POINTER-JUMPING
    compression, the standard DataFrame-only formulation (GraphX /
    GraphFrames' min-propagation plus the path-halving step of
@@ -52,9 +54,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import LongType, StructField, StructType
 
-from enriched_crime_incident_data_pipeline_spark.session import local_frame
+from enriched_crime_incident_data_pipeline_spark.datapipe.graph_tier import (
+    DRIVER_GRAPH_EDGES,
+    _fetch_edges,
+    _node_frame,
+)
 
 # localCheckpoint cadence: truncates iterate lineage so plan size is
 # bounded by the cadence, not the round count
@@ -73,26 +79,40 @@ _CHECKPOINT_EVERY = 4
 # graph (they are overwhelmingly tiny: pairs and triangles).
 SMALL_GRAPH_EDGES = 1_000_000
 
-# Tighter ceiling for the zero-extra-job DRIVER tier (r5): below this
-# many undirected edges the edge list is pulled with ONE ``take`` —
-# the same single pass the old ``count`` cost, but the rows are now
-# already at the driver, so union-find runs there and the label table
-# comes back as a plan-embedded LOCAL relation. That removes the
-# separate single-task kernel job AND its localCheckpoint, and makes
-# every downstream join against the labels broadcast-eligible for
-# free (a local relation has known, tiny size). 50k edges ≈ ~2 MB in
-# the plan — comfortably below task-serialization pain. Between this
-# and SMALL_GRAPH_EDGES the executor-side single-task kernel keeps
-# the data off the driver; above, the distributed loop.
-DRIVER_GRAPH_EDGES = 50_000
+
+def _union_find(pairs) -> dict:
+    """``{node: component label}`` over an iterable of ``(a, b)``
+    pairs, nodes in first-seen order: path-compressed, union-by-min
+    union-find. The root of every set is kept at the component's
+    minimum node id (the larger root is always attached under the
+    smaller), so the label is identical to the distributed min-label
+    fixpoint."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != x:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in pairs:
+        if a not in parent:
+            parent[a] = a
+        if b not in parent:
+            parent[b] = b
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra  # union-by-min: root stays the min id
+    return {n: find(n) for n in parent}
 
 
 def _single_task_components(sym: DataFrame) -> DataFrame:
-    """Exact connected components of a SMALL symmetric edge list in
-    one task: path-compressed, union-by-min union-find. The root of
-    every set is kept at the component's minimum node id (the larger
-    root is always attached under the smaller), so the emitted label
-    is identical to the distributed min-label fixpoint."""
+    """Exact connected components of a SMALL edge list in one task
+    (:func:`_union_find` over every batch)."""
     node_t = sym.schema["src"].dataType
     out_schema = StructType(
         [StructField("node", node_t), StructField("label", node_t)]
@@ -101,30 +121,13 @@ def _single_task_components(sym: DataFrame) -> DataFrame:
     def kernel(batches):
         import pandas as pd
 
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != x:  # path compression
-                parent[x], x = root, parent[x]
-            return root
-
-        for pdf in batches:
-            for a, b in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
-                if a not in parent:
-                    parent[a] = a
-                if b not in parent:
-                    parent[b] = b
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    if rb < ra:
-                        ra, rb = rb, ra
-                    parent[rb] = ra  # union-by-min: root stays the min id
-        nodes = list(parent)
+        labels = _union_find(
+            pair
+            for pdf in batches
+            for pair in zip(pdf["src"].tolist(), pdf["dst"].tolist())
+        )
         yield pd.DataFrame(
-            {"node": nodes, "label": [find(n) for n in nodes]}
+            {"node": list(labels), "label": list(labels.values())}
         )
 
     return sym.repartition(1).mapInPandas(kernel, schema=out_schema)
@@ -138,19 +141,23 @@ def connected_components(
     jump_after: int = 0,
     stats: dict | None = None,
     small_graph_edges: int = SMALL_GRAPH_EDGES,
-    driver_graph_edges: int | None = None,
+    driver_graph_edges: int = DRIVER_GRAPH_EDGES,
 ) -> DataFrame:
     """Component label (the component's minimum node id) for every
     node that appears in ``edges``. Returns ``(node, cluster_id)``.
 
-    Two physical strategies behind one contract:
+    Three physical strategies behind one contract:
 
+    - ``|edges| <= min(small_graph_edges, driver_graph_edges)`` →
+      union-find at the driver (the ``graph_tier`` driver tier); the
+      labels return as a local relation.
     - ``|edges| <= small_graph_edges`` → single-task union-find
       (:func:`_single_task_components`): the edge list is shuffled to
-      one task and resolved in one job. Near-dup graphs after banding
-      are tiny even when the corpus is 100 TB (edges ∝ near-dups, not
-      docs), so this is the common case and removes the per-round
-      fixed job cost that dominated rounds 1-3 benches.
+      one task and resolved in one job, off the driver. Near-dup
+      graphs after banding are small even when the corpus is 100 TB
+      (edges ∝ near-dups, not docs), so one of these two tiers is the
+      common case, and both remove the per-round fixed job cost of
+      the distributed loop.
     - larger graphs → iterative min-label propagation with
       pointer-jumping compression from round ``jump_after`` (default
       0 — always on: the compression self-join is cheap relative to a
@@ -159,78 +166,45 @@ def connected_components(
 
     Pass ``stats={}`` to receive ``stats["rounds"]`` (number of
     distributed rounds; 1 for the single-task path) and
-    ``stats["mode"]`` (``"single_task"`` or ``"distributed"``).
-    Set ``small_graph_edges=0`` to force the distributed path.
+    ``stats["mode"]`` (``"single_task"`` or ``"distributed"``) and,
+    for single-task, ``stats["tier"]`` (``"driver"`` or
+    ``"executor"``). Set ``small_graph_edges=0`` to force the
+    distributed path.
     """
-    # Pin the projected edge list ONCE before anything consumes it
-    # (r10, the er3 attribution): the union's two branches, the
-    # strategy-deciding take, and the post-take count would otherwise
-    # EACH re-evaluate the caller's edge lineage — for er3 that
-    # lineage is a blocked bounded-levenshtein pass, measured ~2 s
-    # per re-run at sf0.1 (~3 evaluations inside one CC call).  Lazy
-    # checkpoint: materialized by whichever action touches it first,
-    # every later consumer reads the pinned rows.
+    # Pin the projected edge list ONCE before anything consumes it:
+    # the union's two branches, the strategy-deciding count and the
+    # tier's own read would otherwise EACH re-evaluate the caller's
+    # edge lineage — for er3 that lineage is a blocked
+    # bounded-levenshtein pass, measured ~2 s per re-run at sf0.1.
+    # Lazy checkpoint: materialized by whichever action touches it
+    # first, every later consumer reads the pinned rows.
     pinned = edges.select(
         F.col(a_col).alias("src"), F.col(b_col).alias("dst")
     ).localCheckpoint(eager=False)
     sym = pinned.union(
         pinned.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    # strategy decision: ONE count against the pinned edges (it also
-    # materializes the checkpoint — the count's cost IS the one
-    # unavoidable edge-lineage evaluation, after which every tier
-    # reads cached rows). The r1-r9 design used an incremental
-    # take(2·cap+1) instead, but for an above-cap graph that take
-    # collected ~100k rows to the driver only to discard them
-    # (measured ~1 s at er3's 135k-edge graph), and any shuffle in
-    # the edge lineage makes "incremental" moot — partition 0 already
-    # runs the whole upstream.
+    # strategy decision: ONE count against the pinned edges, not the
+    # other algorithms' take (it also materializes the checkpoint — the
+    # count's cost IS the one unavoidable edge-lineage evaluation,
+    # after which every tier reads cached rows). For an above-cap graph
+    # a take(cap+1) would collect ~cap rows to the driver only to
+    # discard them (measured ~1 s at er3's 135k-edge graph), and any
+    # shuffle in the edge lineage makes an incremental take moot —
+    # partition 0 already runs the whole upstream.
     n_edges = pinned.count()
-    cap = min(
-        small_graph_edges,
-        DRIVER_GRAPH_EDGES if driver_graph_edges is None else driver_graph_edges,
-    )
-    if n_edges <= cap:
-        # driver tier (the overwhelming near-dup case): collect the
-        # pinned edges — cheap, they are already materialized — and
-        # resolve at the driver; the labels return as a local
-        # relation (no kernel job, broadcast-eligible downstream).
-        head = pinned.collect()
+    if n_edges <= min(small_graph_edges, driver_graph_edges):
+        # driver tier: collect the pinned edges — cheap, they are
+        # already materialized — and resolve at the driver
         if stats is not None:
             stats["rounds"] = 1
             stats["mode"] = "single_task"
             stats["tier"] = "driver"
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != x:  # path compression
-                parent[x], x = root, parent[x]
-            return root
-
-        for r in head:
-            a, b = r[0], r[1]
-            if a not in parent:
-                parent[a] = a
-            if b not in parent:
-                parent[b] = b
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                if rb < ra:
-                    ra, rb = rb, ra
-                parent[rb] = ra  # union-by-min: root stays min id
-        node_t = sym.schema["src"].dataType
-        out_schema = StructType(
-            [
-                StructField("node", node_t),
-                StructField("cluster_id", node_t),
-            ]
-        )
-        return local_frame(
+        return _node_frame(
             edges.sparkSession,
-            [(n, find(n)) for n in sorted(parent)], out_schema
+            sorted(_union_find(pinned.collect()).items()),
+            sym.schema["src"].dataType,
+            "cluster_id",
         )
     if n_edges <= small_graph_edges:
         # executor single-task tier: union-find is direction-blind,
@@ -383,7 +357,7 @@ def label_propagation_communities(
     rounds: int = 3,
     a_col: str = "a",
     b_col: str = "b",
-    driver_graph_edges: int | None = None,
+    driver_graph_edges: int = DRIVER_GRAPH_EDGES,
 ) -> DataFrame:
     """Synchronous label-propagation communities (Raghavan et al.
     2007) over an undirected edge list — the DENSITY signal next to
@@ -407,33 +381,17 @@ def label_propagation_communities(
     sites) never re-executes per round. Returns
     ``(node, community)`` for every edge endpoint.
 
-    Driver tier (the connected_components/HITS/PageRank move): edge
-    lists under ``driver_graph_edges`` (default ``DRIVER_GRAPH_EDGES``)
-    resolve from the sizing take itself — the synchronous rounds are
-    pure integer comparisons, so driver == distributed exactly;
-    bigger graphs keep the distributed rounds. Pass 0 to force the
-    distributed path."""
-    cap = (
-        DRIVER_GRAPH_EDGES
-        if driver_graph_edges is None
-        else driver_graph_edges
-    )
+    Edge lists under ``driver_graph_edges`` run the same rounds at the
+    driver (``graph_tier``); pass 0 to force the distributed path."""
     e_proj = edges.select(F.col(a_col).alias("v"), F.col(b_col).alias("u"))
-    if cap > 0:
-        head = e_proj.take(cap + 1)
-        if len(head) <= cap:
-            lab = _lpa_local(head, rounds)
-            node_t = e_proj.schema["v"].dataType
-            return local_frame(
-                edges.sparkSession,
-                sorted(lab.items()),
-                StructType(
-                    [
-                        StructField("node", node_t),
-                        StructField("community", node_t),
-                    ]
-                ),
-            )
+    head = _fetch_edges(e_proj, driver_graph_edges)
+    if head is not None:
+        return _node_frame(
+            edges.sparkSession,
+            sorted(_lpa_local(head, rounds).items()),
+            e_proj.schema["v"].dataType,
+            "community",
+        )
     sym = (
         e_proj.union(
             edges.select(F.col(b_col).alias("v"), F.col(a_col).alias("u"))
@@ -489,7 +447,7 @@ def k_core(
     rounds: int = 8,
     a_col: str = "a",
     b_col: str = "b",
-    driver_graph_edges: int | None = None,
+    driver_graph_edges: int = DRIVER_GRAPH_EDGES,
 ) -> DataFrame:
     """``(node, core_deg)`` — the synchronous ``rounds``-round k-core
     peel of an undirected edge list: every round simultaneously drops
@@ -512,32 +470,18 @@ def k_core(
     Scale: each round is one semi-join of the pinned symmetrized
     edge relation against the (shrinking) survivor set plus one
     map-side-combinable degree count — O(|E|) per round, fixed round
-    count. Driver tier (the cc/HITS/PageRank/LPA move): edge lists
-    under the take cap peel at the driver — integer-exact, pinned
-    equal to the distributed rounds by the shared tier property
-    test."""
-    cap = (
-        DRIVER_GRAPH_EDGES
-        if driver_graph_edges is None
-        else driver_graph_edges
-    )
+    count. Edge lists under ``driver_graph_edges`` peel at the driver
+    (``graph_tier``)."""
     e_proj = edges.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-    if cap > 0:
-        head = e_proj.take(cap + 1)
-        if len(head) <= cap:
-            node_t = e_proj.schema["a"].dataType
-            from pyspark.sql.types import LongType
-
-            return local_frame(
-                edges.sparkSession,
-                _kcore_local(head, k, rounds),
-                StructType(
-                    [
-                        StructField("node", node_t),
-                        StructField("core_deg", LongType()),
-                    ]
-                ),
-            )
+    head = _fetch_edges(e_proj, driver_graph_edges)
+    if head is not None:
+        return _node_frame(
+            edges.sparkSession,
+            _kcore_local(head, k, rounds),
+            e_proj.schema["a"].dataType,
+            "core_deg",
+            LongType(),
+        )
     e = e_proj.localCheckpoint(eager=True)
     sym = e.select(F.col("a").alias("v"), F.col("b").alias("u")).union(
         e.select(F.col("b").alias("v"), F.col("a").alias("u"))
@@ -674,7 +618,7 @@ def strongly_connected_components(
     edges: DataFrame,
     src_col: str = "src",
     dst_col: str = "dst",
-    driver_graph_edges: int | None = None,
+    driver_graph_edges: int = DRIVER_GRAPH_EDGES,
 ) -> DataFrame:
     """``(node, scc_id)`` — strongly connected components of the
     directed edge list, ``scc_id`` = minimum member id. The directed
@@ -683,12 +627,12 @@ def strongly_connected_components(
     "which pages mutually reach each other", the unit a link-graph
     audit contracts cycles by.
 
-    Driver tier (the shared graph move): edge lists under the take
-    cap run iterative Tarjan at the driver — O(|E|) exact — and
-    return as a local relation. Past the cap: forward/backward
-    min-label PEELING, exact at any size: each outer round computes
-    f(v) = min ancestor-or-self and b(v) = min descendant-or-self
-    over the ACTIVE subgraph (two min-propagation fixpoints);
+    Edge lists under ``driver_graph_edges`` run iterative Tarjan at
+    the driver (``graph_tier``) — O(|E|) exact. Past the cap:
+    forward/backward min-label PEELING, exact at any size: each outer
+    round computes f(v) = min ancestor-or-self and b(v) = min
+    descendant-or-self over the ACTIVE subgraph (two min-propagation
+    fixpoints);
     mutual-reachability makes f and b constant on an SCC, so a whole
     SCC finishes exactly when f == b (its min member is inside), at
     least the active-minimum's SCC finishes every round (f(m)=b(m)=m
@@ -702,28 +646,17 @@ def strongly_connected_components(
     common path, the peeling tier the insurance (O(condensation
     depth) outer rounds × O(diameter) propagation rounds, each one
     join+agg shuffle)."""
-    cap = (
-        DRIVER_GRAPH_EDGES
-        if driver_graph_edges is None
-        else driver_graph_edges
-    )
     e_proj = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     )
-    node_t = e_proj.schema["src"].dataType
-    if cap > 0:
-        head = e_proj.take(cap + 1)
-        if len(head) <= cap:
-            return local_frame(
-                edges.sparkSession,
-                _scc_local(head),
-                StructType(
-                    [
-                        StructField("node", node_t),
-                        StructField("scc_id", node_t),
-                    ]
-                ),
-            )
+    head = _fetch_edges(e_proj, driver_graph_edges)
+    if head is not None:
+        return _node_frame(
+            edges.sparkSession,
+            _scc_local(head),
+            e_proj.schema["src"].dataType,
+            "scc_id",
+        )
     e = e_proj.localCheckpoint(eager=True)
     active = (
         e.select(F.col("src").alias("node"))

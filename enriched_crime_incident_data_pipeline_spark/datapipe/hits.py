@@ -40,11 +40,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField
 
-from enriched_crime_incident_data_pipeline_spark.datapipe.clusters import (
+from enriched_crime_incident_data_pipeline_spark.datapipe.graph_tier import (
     DRIVER_GRAPH_EDGES,
+    _fetch_edges,
+    _node_keyed,
+    _probe,
 )
-from enriched_crime_incident_data_pipeline_spark.session import local_frame
 
 
 def _hits_local(head, iters: int, members: set) -> list:
@@ -52,7 +55,7 @@ def _hits_local(head, iters: int, members: set) -> list:
     recurrence as the distributed path (h_0 ≡ 1 on ``nodes`` only:
     the distributed round-1 join e⋈h drops contributions from srcs
     outside the node set, so the seed here is restricted to
-    ``members`` — srcs verified present in ``nodes``; integer sums
+    ``members`` — srcs present in ``nodes``; integer sums
     are associative, so any summation order is THE answer). Python
     ints (arbitrary precision) mean overflow is impossible here; the
     distributed/oracle BIGINT bound still governs the contract."""
@@ -89,78 +92,33 @@ def hits_scores(
     with h_0 ≡ 1. All sums are BIGINT — see module docstring for the
     exactness and overflow arguments.
 
-    Driver tier (r5, the ``connected_components`` move): near-dup
-    citation graphs are tiny even on a 100 TB corpus (edges ∝
-    duplicates, not docs), so one partition-incremental ``take``
-    both decides the strategy and delivers the edge list; the
-    iteration then runs at the driver (integer sums — exactly the
-    distributed recurrence) and the scores return as a broadcast
-    local relation, replacing 2·iters join+agg stages with one map
-    join. Graphs past the cap keep the distributed plan; the take's
-    wasted work is bounded at ~cap rows. Set
-    ``driver_graph_edges=0`` to force the distributed path."""
+    Edge lists under ``driver_graph_edges`` iterate at the driver
+    (``graph_tier``), replacing 2·iters join+agg stages with one map
+    join; ``h_0`` is seeded from ``nodes``, so that tier probes which
+    srcs are nodes unless ``nodes_cover_edges`` promises all are (see
+    :func:`pagerank.pagerank`)."""
     e_proj = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     )
     out_ids = nodes.select(F.col(id_col).alias("id"))
-    if driver_graph_edges > 0:
-        head = e_proj.take(driver_graph_edges + 1)
-        if len(head) <= driver_graph_edges:
-            spark = edges.sparkSession
-            from pyspark.sql.types import LongType, StructField, StructType
-
-            node_t = out_ids.schema["id"].dataType
-            # h_0 is seeded from `nodes`, so the driver iterate needs
-            # src ∈ nodes membership to match the distributed round-1
-            # join exactly (r6, ADVICE): one column-pruned scan of
-            # nodes semi-joined against the ≤cap distinct srcs; the
-            # collect is bounded by the src count, never |nodes|.
-            # r7: skipped under the caller's nodes_cover_edges
-            # contract (see pagerank.py) — the probe measured
-            # +0.33 s/call at sf0.1 and proves a structural fact at
-            # the registry call sites.
-            srcs = sorted({r[0] for r in head})
-            members: set = set()
-            if nodes_cover_edges:
-                members = set(srcs)
-            elif srcs:
-                src_df = local_frame(
-                    spark,
-                    [(s,) for s in srcs],
-                    StructType([StructField("id", node_t)]),
-                )
-                members = {
-                    r[0]
-                    for r in out_ids.join(
-                        F.broadcast(src_df), "id", "leftsemi"
-                    ).collect()
-                }
-            rows = _hits_local(head, iters, members)
-            local = local_frame(
-                spark,
-                rows,
-                StructType(
-                    [
-                        StructField("id", node_t),
-                        StructField("authority", LongType()),
-                        StructField("hub", LongType()),
-                    ]
-                ),
-            )
-            return (
-                out_ids.join(F.broadcast(local), "id", "left")
-                .select(
-                    "id",
-                    F.coalesce("authority", F.lit(0))
-                    .cast("bigint")
-                    .alias("authority"),
-                    F.coalesce("hub", F.lit(0)).cast("bigint").alias("hub"),
-                )
-            )
-    # pin the edge relation once (the pagerank.py move): it is joined
-    # 2×iters times, and without the cut its upstream lineage (LSH
-    # banding on real call sites) re-executes per half-round —
-    # measured 3.4 → 2.3 s on gr3 @ sf0.1
+    head = _fetch_edges(e_proj, driver_graph_edges)
+    if head is not None:
+        members, _ = _probe(
+            out_ids, sorted({r[0] for r in head}), nodes_cover_edges
+        )
+        return _node_keyed(
+            out_ids,
+            _hits_local(head, iters, members),
+            [
+                StructField("authority", LongType()),
+                StructField("hub", LongType()),
+            ],
+            F.lit(0),
+        )
+    # pin the edge relation once: it is joined 2×iters times, and
+    # without the cut its upstream lineage (LSH banding on real call
+    # sites) re-executes per half-round — measured 3.4 → 2.3 s on gr3
+    # @ sf0.1
     e = e_proj.localCheckpoint(eager=True)
     h = nodes.select(
         F.col(id_col).alias("id"), F.lit(1).cast("bigint").alias("s")

@@ -116,23 +116,6 @@ def extract_byte_histograms(media: DataFrame, dim: int = 8) -> DataFrame:
     return media.select("media_id", "kind", "content").mapInPandas(run, HIST_DDL)
 
 
-def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plumbing: emits (media_id, frame_ts_ms)
-    rows from duration metadata — the decode of each frame is the
-    stubbed kernel. Pure column ops (sequence + explode), so the
-    fan-out is JVM-side."""
-    return (
-        media.filter(F.col("kind") == "video")
-        .filter(F.col("duration_ms").isNotNull())
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(F.lit(0), F.col("duration_ms"), F.lit(every_ms))
-            ).alias("frame_ts_ms"),
-        )
-    )
-
-
 def sample_frame_offsets(
     media: DataFrame, step_ms: int = 1000, id_col: str = "media_id"
 ) -> DataFrame:

@@ -44,42 +44,45 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField
 
-from enriched_crime_incident_data_pipeline_spark.datapipe.clusters import (
+from enriched_crime_incident_data_pipeline_spark.datapipe.graph_tier import (
     DRIVER_GRAPH_EDGES,
+    _fetch_edges,
+    _node_keyed,
+    _probe,
 )
-from enriched_crime_incident_data_pipeline_spark.session import local_frame
 
 ALPHA = 0.15
 
 
-def _pin(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=True)
-
-
-def _pagerank_local(
+def _power_local(
     head,
     iters: int,
     alpha: float,
-    tol: float | None,
-    dangling: bool,
-    n_nodes: int | None,
-    stats: dict | None,
     members: set,
+    seeds: set | None = None,
+    tol: float | None = None,
+    dangling: bool = False,
+    n_nodes: int | None = None,
 ):
     """Driver-resident power iteration — float-for-float the ordered
-    distributed recurrence: per-dst contributions fold in ascending
-    src order (the ``ordered=True`` contract), and the update is the
-    identical ``alpha + (1-alpha) * incoming`` double expression.
-    The distributed iterate keys rank state on ``nodes`` every round
-    (the left join rebuilds it), so endpoints OUTSIDE the node set
-    never hold rank and never contribute — ``members`` (endpoints
-    verified present in ``nodes``) restricts the driver state the
-    same way (r6, ADVICE). Nodes outside the edge set share one
-    trajectory (``bg``): 1.0, then ``alpha`` (+ the dangling teleport
-    when enabled) — tracked as a scalar, never enumerated, so the
-    driver holds O(|E|) state no matter how many nodes the graph
-    has. Returns ``(endpoint_ranks: dict, bg: float, rounds: int)``."""
+    distributed tier of :func:`_power_iteration`: per-dst
+    contributions fold in ascending src order (the ``ordered=True``
+    contract), and the update is the identical
+    ``t(v) + (1-alpha) * incoming`` double expression. The teleport is
+    ``t(v) = alpha`` for PageRank (``seeds=None``, ``r_0 = 1``) and
+    ``alpha·1_S(v)`` for personalized PageRank (``seeds`` = the seed
+    endpoints, ``r_0 = 1_S``).
+
+    Rank state is restricted to ``members`` (endpoints present in
+    ``nodes``; see ``graph_tier._probe``). Teleporting nodes outside
+    the edge set share one trajectory ``bg``: 1.0, then ``alpha``
+    (+ the dangling teleport when enabled) — tracked as a scalar,
+    never enumerated, so the driver holds O(|E|) state no matter how
+    many nodes the graph has. A non-teleporting one (a non-seed)
+    stays 0.0: ``dangling`` is PageRank-only. Returns
+    ``(endpoint_ranks: dict, bg: float, rounds: int)``."""
     edges = [(r[0], r[1]) for r in head]
     outdeg: dict = {}
     for u, _ in edges:
@@ -96,9 +99,14 @@ def _pagerank_local(
             in_lists.setdefault(v, []).append(u)
     for v in in_lists:
         in_lists[v].sort()
+    tele = {
+        k: alpha if seeds is None or k in seeds else 0.0 for k in endpoints
+    }
     dang_ep = [k for k in endpoints if k not in outdeg]
     n_bg = (n_nodes - len(endpoints)) if n_nodes is not None else 0
-    ranks = {k: 1.0 for k in endpoints}
+    ranks = {
+        k: 1.0 if seeds is None or k in seeds else 0.0 for k in endpoints
+    }
     bg = 1.0
     rounds = 0
     for _ in range(iters):
@@ -115,7 +123,7 @@ def _pagerank_local(
             s = 0.0
             for u in in_lists.get(k, ()):
                 s += prev[u] / float(outdeg[u])
-            new[k] = alpha + (1.0 - alpha) * (s + add)
+            new[k] = tele[k] + (1.0 - alpha) * (s + add)
         bg = alpha + (1.0 - alpha) * add
         ranks = new
         rounds += 1
@@ -131,169 +139,89 @@ def _pagerank_local(
                     delta = d
             if delta <= tol:
                 break
-    if stats is not None:
-        stats["rounds"] = rounds
-        stats["tier"] = "driver"
     return ranks, bg, rounds
 
 
-def pagerank(
+def _power_iteration(
     edges: DataFrame,
     nodes: DataFrame,
-    iters: int = 5,
-    alpha: float = ALPHA,
-    ordered: bool = False,
-    tol: float | None = None,
-    dangling: bool = False,
-    stats: dict | None = None,
-    driver_graph_edges: int = DRIVER_GRAPH_EDGES,
-    nodes_cover_edges: bool = False,
+    seeds: DataFrame | None,
+    iters: int,
+    alpha: float,
+    ordered: bool,
+    tol: float | None,
+    dangling: bool,
+    stats: dict | None,
+    driver_graph_edges: int,
+    nodes_cover_edges: bool,
 ) -> DataFrame:
-    """``(id, rank)`` for every node after ``iters`` damped rounds.
-
-    ``nodes_cover_edges`` (r7): caller contract that every edge
-    endpoint appears in ``nodes``. When the graph is BUILT that way
-    (the registry call sites: ``nodes`` = all doc_ids and edges are
-    pairs of doc_ids), the driver tier's node-membership probe —
-    one broadcast semi-join + collect per call, measured +0.33-0.37 s
-    at sf0.1 in the r7 interleaved A/B — proves a fact the caller
-    already knows, so ``True`` skips it (``members`` = all
-    endpoints). Callers that cannot guarantee coverage keep the
-    default and pay the probe; results are identical either way
-    whenever the contract holds (property-pinned).
-
-    ``edges`` must have columns ``src``/``dst`` (duplicate edges
-    count twice, matching multigraph semantics); ``nodes`` one
-    column ``id`` covering at least every endpoint. Nodes with no
-    in-links converge to ``alpha``.
-
-    ``tol`` (r5): convergence early exit — after each round, one
-    scalar action computes ``max |rank_k+1 − rank_k|`` over the two
-    pinned iterates (a |V|-row id join, the same cheap-scalar shape
-    as CC's ``sum(label)`` probe) and the loop stops once it is
-    ≤ ``tol``. ``tol=0.0`` exits only at a bit-exact fixpoint, so the
-    result is IDENTICAL to running all ``iters`` rounds — the safe
-    setting under an unrolled-SQL oracle. DAGs reach that fixpoint in
-    depth+1 rounds (rank mass only flows downward), which is where
-    the early exit actually fires; cyclic graphs converge
-    geometrically and should use a small positive ``tol`` when ulp
-    drift is acceptable. Pass ``stats={}`` to read back
-    ``stats["rounds"]``.
-
-    ``dangling`` (r5): redistribute dangling mass — nodes with no
-    out-links leak their rank in the GraphX-style unnormalized
-    variant (the default here, matching the gr1 oracle); with
-    ``dangling=True`` each round adds ``Σ_dangling rank(u) / N`` to
-    every node's incoming sum (the classic random-surfer teleport
-    from dangling nodes). The dangling rank sum is one scalar
-    aggregate per round over the pinned iterate restricted to the
-    (pinned once) dangling id set — never a join of the full graph.
-    """
-    # driver tier (r5, the connected_components move): link graphs
-    # after near-dup banding are tiny even on a 100 TB corpus, so one
-    # partition-incremental take both decides the strategy and
-    # delivers the edges; the iteration runs at the driver with the
-    # ORDERED fold semantics (sorted-src sequential double adds — a
-    # strict subset of both modes' contracts) and O(|E|) driver
-    # state, replacing per-round join+agg+checkpoint jobs with one
-    # broadcast map join. Graphs past the cap keep the distributed
-    # plan. driver_graph_edges=0 forces the distributed path.
-    if driver_graph_edges > 0:
-        head = edges.select("src", "dst").take(driver_graph_edges + 1)
-        if len(head) <= driver_graph_edges:
-            from pyspark.sql.types import DoubleType, StructField, StructType
-
-            node_t = nodes.schema[0].dataType
-            # rank state lives on `nodes` in the distributed iterate,
-            # so the driver tier needs endpoint ∈ nodes membership to
-            # match it exactly (r6, ADVICE). r7: the probe is skipped
-            # when the caller guarantees coverage, and otherwise FUSES
-            # with the n_nodes count when that count is needed anyway
-            # (dangling/tol) — one column-pruned scan of nodes either
-            # way, with the collect bounded by the ≤2·cap endpoint
-            # count, never |nodes|.
-            eps = sorted({r[0] for r in head} | {r[1] for r in head})
-            need_n = dangling or tol is not None
-            n_nodes_i: int | None = None
-            members: set = set()
-            if nodes_cover_edges:
-                members = set(eps)
-                if need_n:
-                    n_nodes_i = nodes.count()
-            elif eps:
-                ep_df = local_frame(
-                    edges.sparkSession,
-                    [(x,) for x in eps],
-                    StructType([StructField("id", node_t)]),
-                )
-                if need_n:
-                    # one job returns BOTH scalars: left-mark nodes
-                    # against the broadcast endpoints, aggregate
-                    # count(*) + the marked-id list (≤ |eps| entries)
-                    row = (
-                        nodes.select("id")
-                        .join(
-                            F.broadcast(
-                                ep_df.withColumn("_m", F.lit(1))
-                            ),
-                            "id",
-                            "left",
-                        )
-                        .agg(
-                            F.count(F.lit(1)).alias("n"),
-                            F.collect_list(
-                                F.when(F.col("_m") == 1, F.col("id"))
-                            ).alias("mem"),
-                        )
-                        .collect()[0]
-                    )
-                    n_nodes_i = row["n"]
-                    members = set(row["mem"])
-                else:
-                    members = {
-                        r[0]
-                        for r in nodes.select("id")
-                        .join(F.broadcast(ep_df), "id", "leftsemi")
-                        .collect()
-                    }
-            elif need_n:
-                n_nodes_i = nodes.count()
-            ranks_d, bg, _ = _pagerank_local(
-                head, iters, alpha, tol, dangling, n_nodes_i, stats, members
-            )
-            local = local_frame(
-                edges.sparkSession,
-                sorted(ranks_d.items()),
-                StructType(
-                    [
-                        StructField("id", node_t),
-                        StructField("_r", DoubleType()),
-                    ]
-                ),
-            )
-            return (
-                nodes.select("id")
-                .join(F.broadcast(local), "id", "left")
-                .select(
-                    "id", F.coalesce("_r", F.lit(bg)).alias("rank")
-                )
-            )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    weighted = _pin(
-        edges.join(deg, "src").select(
-            "src", "dst", F.col("outdeg").cast("double").alias("outdeg")
+    """Both tiers of :func:`pagerank` (``seeds=None``) and
+    :func:`personalized_pagerank`. The driver tier runs the ORDERED
+    fold (sorted-src sequential double adds — a strict subset of both
+    modes' contracts)."""
+    e_proj = edges.select("src", "dst")
+    ids = nodes.select("id")
+    flagged = None
+    if seeds is not None:
+        seed_ids = seeds.select(
+            F.col(seeds.columns[0]).alias("id")
+        ).distinct()
+        flagged = ids.join(
+            F.broadcast(seed_ids.withColumn("_s", F.lit(1))), "id", "left"
         )
-    )
+    head = _fetch_edges(e_proj, driver_graph_edges)
+    if head is not None:
+        eps = sorted({r[0] for r in head} | {r[1] for r in head})
+        members, n_nodes = _probe(
+            ids, eps, nodes_cover_edges, count=dangling or tol is not None
+        )
+        seed_eps = None
+        if seeds is not None:
+            seed_eps, _ = _probe(
+                seed_ids, eps, key_t=ids.schema["id"].dataType
+            )
+        ranks, bg, rounds = _power_local(
+            head, iters, alpha, members, seed_eps, tol, dangling, n_nodes
+        )
+        if stats is not None:
+            stats["rounds"] = rounds
+            stats["tier"] = "driver"
+        fill = F.lit(bg)
+        if flagged is not None:
+            ids = flagged
+            fill = F.when(F.col("_s") == 1, fill).otherwise(F.lit(0.0))
+        return _node_keyed(
+            ids,
+            sorted(ranks.items()),
+            [StructField("rank", DoubleType())],
+            fill,
+        )
+    if flagged is None:
+        base, r0, tele = ids, F.lit(1.0), F.lit(alpha)
+    else:
+        # the per-node seed flag, pinned once and read every round
+        base = flagged.select(
+            "id", F.coalesce("_s", F.lit(0)).alias("_s")
+        ).localCheckpoint(eager=True)
+        r0 = F.col("_s").cast("double")
+        tele = F.lit(alpha) * F.col("_s").cast("double")
+    # damped power iteration over ``base`` from ``rank = r0`` with
+    # update ``tele + (1-alpha) * incoming``; the weighted edges, the
+    # dangling id set and every iterate are pinned with an eager
+    # localCheckpoint, so no round re-derives them and lineage stays
+    # flat
+    deg = e_proj.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+    weighted = e_proj.join(deg, "src").select(
+        "src", "dst", F.col("outdeg").cast("double").alias("outdeg")
+    ).localCheckpoint(eager=True)
     if dangling:
-        dang = _pin(
-            nodes.join(
-                weighted.select("src").distinct(),
-                nodes["id"] == F.col("src"),
-                "left_anti",
-            ).select("id")
-        )
-        n_nodes = float(nodes.count())
-    ranks = nodes.select("id", F.lit(1.0).alias("rank"))
+        dang = base.join(
+            weighted.select("src").distinct(),
+            base["id"] == F.col("src"),
+            "left_anti",
+        ).select("id").localCheckpoint(eager=True)
+        n_nodes = float(base.count())
+    ranks = base.select("id", r0.alias("rank"))
     rounds = 0
     for _ in range(iters):
         prev = ranks
@@ -320,12 +248,9 @@ def pagerank(
                 ranks.join(dang, "id").agg(F.sum("rank")).first()[0] or 0.0
             )
             incoming = incoming + F.lit(dmass / n_nodes)
-        ranks = _pin(
-            nodes.join(summed, nodes["id"] == summed["dst"], "left").select(
-                "id",
-                (F.lit(alpha) + F.lit(1.0 - alpha) * incoming).alias("rank"),
-            )
-        )
+        ranks = base.join(summed, base["id"] == summed["dst"], "left").select(
+            "id", (tele + F.lit(1.0 - alpha) * incoming).alias("rank")
+        ).localCheckpoint(eager=True)
         rounds += 1
         if tol is not None:
             delta = (
@@ -346,42 +271,59 @@ def pagerank(
     return ranks
 
 
-def _ppr_local(head, iters: int, alpha: float, members: set, seeds: set):
-    """Driver-resident personalized power iteration — float-for-float
-    the distributed recurrence below: ``r_0(v) = 1_S(v)``,
-    ``r_{k+1}(v) = alpha·1_S(v) + (1-alpha)·incoming`` with the
-    ordered (ascending-src) contribution fold. Out-of-edge background
-    splits into TWO scalar trajectories: non-seed background is 0.0
-    forever (teleport 0, no in-edges), seed background is 1.0 then
-    constant ``alpha`` from round 1. Returns
-    ``(endpoint_ranks, seed_bg, nonseed_bg)``."""
-    edges = [(r[0], r[1]) for r in head]
-    outdeg: dict = {}
-    for u, _ in edges:
-        outdeg[u] = outdeg.get(u, 0) + 1
-    endpoints = sorted(
-        ({u for u, _ in edges} | {v for _, v in edges}) & members
+def pagerank(
+    edges: DataFrame,
+    nodes: DataFrame,
+    iters: int = 5,
+    alpha: float = ALPHA,
+    ordered: bool = False,
+    tol: float | None = None,
+    dangling: bool = False,
+    stats: dict | None = None,
+    driver_graph_edges: int = DRIVER_GRAPH_EDGES,
+    nodes_cover_edges: bool = False,
+) -> DataFrame:
+    """``(id, rank)`` for every node after ``iters`` damped rounds.
+
+    ``edges`` must have columns ``src``/``dst`` (duplicate edges
+    count twice, matching multigraph semantics); ``nodes`` one
+    column ``id`` covering at least every endpoint. Nodes with no
+    in-links converge to ``alpha``.
+
+    Edge lists under ``driver_graph_edges`` iterate at the driver
+    (``graph_tier``). ``nodes_cover_edges`` is the caller's promise
+    that every edge endpoint appears in ``nodes`` (true where the
+    graph is BUILT that way: the registry's ``nodes`` are all doc_ids
+    and its edges pairs of doc_ids); it skips the driver tier's
+    membership probe. Results are identical either way whenever the
+    promise holds (property-pinned).
+
+    ``tol``: convergence early exit — after each round, one scalar
+    action computes ``max |rank_k+1 − rank_k|`` over the two pinned
+    iterates (a |V|-row id join, the same cheap-scalar shape as CC's
+    ``sum(label)`` probe) and the loop stops once it is ≤ ``tol``.
+    ``tol=0.0`` exits only at a bit-exact fixpoint, so the result is
+    IDENTICAL to running all ``iters`` rounds — the safe setting
+    under an unrolled-SQL oracle. DAGs reach that fixpoint in depth+1
+    rounds (rank mass only flows downward), which is where the early
+    exit actually fires; cyclic graphs converge geometrically and
+    should use a small positive ``tol`` when ulp drift is acceptable.
+    Pass ``stats={}`` to read back ``stats["rounds"]`` (and
+    ``stats["tier"] == "driver"`` on the driver tier).
+
+    ``dangling``: redistribute dangling mass — nodes with no
+    out-links leak their rank in the GraphX-style unnormalized
+    variant (the default here, matching the gr1 oracle); with
+    ``dangling=True`` each round adds ``Σ_dangling rank(u) / N`` to
+    every node's incoming sum (the classic random-surfer teleport
+    from dangling nodes). The dangling rank sum is one scalar
+    aggregate per round over the pinned iterate restricted to the
+    (pinned once) dangling id set — never a join of the full graph.
+    """
+    return _power_iteration(
+        edges, nodes, None, iters, alpha, ordered, tol, dangling, stats,
+        driver_graph_edges, nodes_cover_edges,
     )
-    in_lists: dict = {}
-    for u, v in edges:
-        if u in members and v in members:
-            in_lists.setdefault(v, []).append(u)
-    for v in in_lists:
-        in_lists[v].sort()
-    ranks = {k: (1.0 if k in seeds else 0.0) for k in endpoints}
-    seed_bg = 1.0
-    for _ in range(iters):
-        prev = ranks
-        new = {}
-        for k in endpoints:
-            s = 0.0
-            for u in in_lists.get(k, ()):
-                s += prev[u] / float(outdeg[u])
-            base = alpha if k in seeds else 0.0
-            new[k] = base + (1.0 - alpha) * s
-        seed_bg = alpha
-        ranks = new
-    return ranks, seed_bg, 0.0
 
 
 def personalized_pagerank(
@@ -400,125 +342,19 @@ def personalized_pagerank(
     — the crawl-frontier/seed-expansion scorer (rank mass measures
     proximity to the seeds through the link structure; nodes
     unreachable from seeds score exactly 0). The unnormalized analog
-    of gr1's variant: same damped update, the teleport constant
-    restricted to seeds.
+    of gr1's variant: the same iteration with the teleport restricted
+    to seeds.
 
     ``seeds`` is a 1-column ``id`` relation and is broadcast — seed
     sets are small by construction (crawl seeds, trusted domains).
-    Driver tier under the shared take cap (bounded extra probe: seed
-    membership of the ≤2·cap endpoints rides one broadcast semi-join
-    against ``seeds``, not a scan of anything corpus-sized);
-    distributed tier pins a per-node seed flag once and reuses it
-    every round. ``ordered=True`` uses the ascending-src fold — the
-    bit-exact cross-engine mode (the gr1 contract). ``dangling`` and
-    ``tol`` are deliberately not offered here: dangling teleport
+    The driver tier (``graph_tier``) adds one bounded probe: seed
+    membership of the ≤2·cap endpoints, one broadcast semi-join
+    against ``seeds``. ``ordered=True`` uses the ascending-src fold —
+    the bit-exact cross-engine mode (the gr1 contract). ``dangling``
+    and ``tol`` are deliberately not offered here: dangling teleport
     interacts with personalization (mass restarts at seeds) and is a
     different operator."""
-    e_proj = edges.select("src", "dst")
-    node_t = nodes.schema[0].dataType
-    seed_ids = seeds.select(F.col(seeds.columns[0]).alias("id")).distinct()
-    if driver_graph_edges > 0:
-        head = e_proj.take(driver_graph_edges + 1)
-        if len(head) <= driver_graph_edges:
-            from pyspark.sql.types import DoubleType, StructField, StructType
-
-            eps = sorted({r[0] for r in head} | {r[1] for r in head})
-            members: set = set(eps)
-            ep_df = None
-            if eps:
-                ep_df = local_frame(
-                    edges.sparkSession,
-                    [(x,) for x in eps],
-                    StructType([StructField("id", node_t)]),
-                )
-            if not nodes_cover_edges and ep_df is not None:
-                members = {
-                    r[0]
-                    for r in nodes.select("id")
-                    .join(F.broadcast(ep_df), "id", "leftsemi")
-                    .collect()
-                }
-            seed_eps: set = set()
-            if ep_df is not None:
-                seed_eps = {
-                    r[0]
-                    for r in seed_ids.join(
-                        F.broadcast(ep_df), "id", "leftsemi"
-                    ).collect()
-                }
-            ranks_d, seed_bg, nonseed_bg = _ppr_local(
-                head, iters, alpha, members, seed_eps
-            )
-            local = local_frame(
-                edges.sparkSession,
-                sorted(ranks_d.items()),
-                StructType(
-                    [
-                        StructField("id", node_t),
-                        StructField("_r", DoubleType()),
-                    ]
-                ),
-            )
-            return (
-                nodes.select("id")
-                .join(
-                    F.broadcast(seed_ids.withColumn("_s", F.lit(1))),
-                    "id",
-                    "left",
-                )
-                .join(F.broadcast(local), "id", "left")
-                .select(
-                    "id",
-                    F.coalesce(
-                        "_r",
-                        F.when(F.col("_s") == 1, F.lit(seed_bg)).otherwise(
-                            F.lit(nonseed_bg)
-                        ),
-                    ).alias("rank"),
-                )
-            )
-    deg = e_proj.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    weighted = _pin(
-        e_proj.join(deg, "src").select(
-            "src", "dst", F.col("outdeg").cast("double").alias("outdeg")
-        )
+    return _power_iteration(
+        edges, nodes, seeds, iters, alpha, ordered, None, False, None,
+        driver_graph_edges, nodes_cover_edges,
     )
-    flags = _pin(
-        nodes.select("id")
-        .join(
-            F.broadcast(seed_ids.withColumn("_s", F.lit(1))), "id", "left"
-        )
-        .select("id", F.coalesce("_s", F.lit(0)).alias("_s"))
-    )
-    ranks = flags.select(
-        "id", F.col("_s").cast("double").alias("rank")
-    )
-    for _ in range(iters):
-        contribs = weighted.join(
-            ranks, weighted["src"] == ranks["id"]
-        ).select(
-            "dst", "src", (F.col("rank") / F.col("outdeg")).alias("c")
-        )
-        if ordered:
-            summed = contribs.groupBy("dst").agg(
-                F.aggregate(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("src"), F.col("c")))
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x["c"],
-                ).alias("s")
-            )
-        else:
-            summed = contribs.groupBy("dst").agg(F.sum("c").alias("s"))
-        incoming = F.coalesce(F.col("s"), F.lit(0.0))
-        ranks = _pin(
-            flags.join(summed, flags["id"] == summed["dst"], "left").select(
-                "id",
-                (
-                    F.lit(alpha) * F.col("_s").cast("double")
-                    + F.lit(1.0 - alpha) * incoming
-                ).alias("rank"),
-            )
-        )
-    return ranks

@@ -142,7 +142,7 @@ def q_json2_schema_profile(spark, sf_dir):
     t = (
         F.when(F.col("val").isNull(), "null")
         .when(F.col("val").rlike("^-?[0-9]+$"), "int")
-        .when(F.col("val").rlike("^-?[0-9]*\.[0-9]+$"), "float")
+        .when(F.col("val").rlike("^-?[0-9]*\\.[0-9]+$"), "float")
         .when(F.col("val").isin("true", "false"), "bool")
         .otherwise("string")
     )
@@ -992,7 +992,7 @@ def oracles() -> dict[str, str]:
                      CASE WHEN val IS NULL THEN 'null'
                           WHEN regexp_full_match(val, '-?[0-9]+')
                             THEN 'int'
-                          WHEN regexp_full_match(val, '-?[0-9]*\.[0-9]+')
+                          WHEN regexp_full_match(val, '-?[0-9]*\\.[0-9]+')
                             THEN 'float'
                           WHEN val IN ('true', 'false') THEN 'bool'
                           ELSE 'string' END AS t

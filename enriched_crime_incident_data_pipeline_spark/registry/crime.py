@@ -39,15 +39,17 @@ from enriched_crime_incident_data_pipeline_spark.registry._shared import (
 # ---------------------------------------------------------------------------
 
 
-def q_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
+def enriched_incidents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The flagship pipeline over the fixture tables up to its sink:
+    bronze → silver → dedup+EMSSTAT → ranks → coordinates →
+    side-of-town → weather, every column (pre-projection). The
+    flagship query projects it; the CLI's ``report`` and ``export``
+    sink it."""
     from enriched_crime_incident_data_pipeline_spark.operators.emsstat import (
         dedup_and_propagate,
     )
     from enriched_crime_incident_data_pipeline_spark.plans.pipeline import (
         enrich_after_emsstat,
-    )
-    from enriched_crime_incident_data_pipeline_spark.sinks.output import (
-        gold_projection,
     )
 
     events = load_table(spark, sf_dir, "events")
@@ -76,7 +78,15 @@ def q_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     wh = synthetic_weather_hourly(with_coordinates(base, dim)).localCheckpoint(
         eager=True
     )
-    return gold_projection(enrich_after_emsstat(base, dim, wh))
+    return enrich_after_emsstat(base, dim, wh)
+
+
+def q_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from enriched_crime_incident_data_pipeline_spark.sinks.output import (
+        gold_projection,
+    )
+
+    return gold_projection(enriched_incidents(spark, sf_dir))
 
 # ---------------------------------------------------------------------------
 # §2.2 projections / filters

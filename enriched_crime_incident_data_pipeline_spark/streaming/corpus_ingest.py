@@ -278,11 +278,9 @@ def run_corpus_ingest_stream(
     deployment knob (``streaming.windows.default_state_partitions``).
     The session conf is restored after the bounded run."""
     from enriched_crime_incident_data_pipeline_spark.streaming.windows import (
-        default_state_partitions,
+        bounded_run_conf,
     )
 
-    if state_partitions == "auto":
-        state_partitions = default_state_partitions()
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -292,16 +290,8 @@ def run_corpus_ingest_stream(
     # ``state_partitions`` (nothing for AQE coalescing to do) and AQE
     # materializes every exchange as its own driver job — measured
     # 10-14 → 3-6 jobs per batch, ~0.3-0.8 s/batch at sf0.1; see
-    # corpus_refresh.py's runner for the full rationale. Restored
-    # after the bounded run.
-    prev = None
-    prev_aqe = None
-    if state_partitions is not None:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    # corpus_refresh.py's runner for the full rationale.
+    with bounded_run_conf(spark, state_partitions, adaptive=False):
         q = (
             stream.writeStream.foreachBatch(
                 corpus_ingest_batch(state_dir, seg_tokens)
@@ -313,11 +303,6 @@ def run_corpus_ingest_stream(
             .start()
         )
         q.awaitTermination()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if prev_aqe is not None:
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
     return (
         read_state(spark, _p(state_dir, _STATE), INGEST_STATE_SCHEMA)
         .filter(F.col("n_kept").isNotNull())

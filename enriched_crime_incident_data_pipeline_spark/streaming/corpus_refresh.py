@@ -286,11 +286,9 @@ def run_corpus_refresh_stream(
     # corpus_build3's fusion idiom) instead of once per artifact;
     # eval grams collected ONCE as before
     from enriched_crime_incident_data_pipeline_spark.streaming.windows import (
-        default_state_partitions,
+        bounded_run_conf,
     )
 
-    if state_partitions == "auto":
-        state_partitions = default_state_partitions()
     # conf scope covers seed + fold (r11): shuffle partitions track
     # state volume, and ADAPTIVE EXECUTION IS OFF for the fold —
     # Structured Streaming itself never applies AQE to micro-batch
@@ -303,61 +301,53 @@ def run_corpus_refresh_stream(
     # A deployment whose band buckets skew re-enables AQE by sizing
     # partitions via $SPARK_GRAFT_STATE_PARTITIONS and flipping the
     # session conf — the fold restores whatever was set before.
-    prev = None
-    prev_aqe = None
     probe = None
-    if state_partitions is not None:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        old_base = with_minhash_cols(
-            old_docs.select(
-                "doc_id",
-                "text",
-                doc_fingerprint(F.col("text")).alias("fingerprint"),
+    with bounded_run_conf(spark, state_partitions, adaptive=False):
+        try:
+            old_base = with_minhash_cols(
+                old_docs.select(
+                    "doc_id",
+                    "text",
+                    doc_fingerprint(F.col("text")).alias("fingerprint"),
+                )
+                # text is consumed inside the same pass; drop it before
+                # the pin so the checkpointed relation is (id, fp, 16
+                # longs)
+            ).drop("text").localCheckpoint(eager=False)
+            _band_kind(bands_from_sigs(old_base)).unionByName(
+                _fingerprint_kind(old_base.select("fingerprint").distinct())
+            ).write.mode("overwrite").parquet(_batch_p(state_dir, _STATE, -1))
+            probe = GramProbe(
+                spark.sparkContext,
+                frozenset(
+                    r[0]
+                    for r in doc_ngrams(eval_docs, ngram)
+                    .select("gram")
+                    .distinct()
+                    .collect()
+                ),
+                ngram,
             )
-            # text is consumed inside the same pass; drop it before the
-            # pin so the checkpointed relation is (id, fp, 16 longs)
-        ).drop("text").localCheckpoint(eager=False)
-        _band_kind(bands_from_sigs(old_base)).unionByName(
-            _fingerprint_kind(old_base.select("fingerprint").distinct())
-        ).write.mode("overwrite").parquet(_batch_p(state_dir, _STATE, -1))
-        probe = GramProbe(
-            spark.sparkContext,
-            frozenset(
-                r[0]
-                for r in doc_ngrams(eval_docs, ngram)
-                .select("gram")
-                .distinct()
-                .collect()
-            ),
-            ngram,
-        )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(new_docs_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(
-                corpus_refresh_batch(state_dir, cutoff, probe)
+            stream = (
+                spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(new_docs_dir)
             )
-            .option(
-                "checkpointLocation", _p(state_dir, f"_ckpt_{uuid.uuid4().hex}")
+            q = (
+                stream.writeStream.foreachBatch(
+                    corpus_refresh_batch(state_dir, cutoff, probe)
+                )
+                .option(
+                    "checkpointLocation",
+                    _p(state_dir, f"_ckpt_{uuid.uuid4().hex}"),
+                )
+                .trigger(availableNow=True)
+                .start()
             )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if probe is not None:
-            probe.release()
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if prev_aqe is not None:
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+            q.awaitTermination()
+        finally:
+            if probe is not None:
+                probe.release()
     return (
         read_state(spark, _p(state_dir, _STATE), REFRESH_STATE_SCHEMA)
         .filter(F.col("verdict").isNotNull())

@@ -778,3 +778,94 @@ def test_deletion_variant_hot_cap_bounds_degenerate_domain(spark):
     # default (no cap) is EXACT: every pair from the hot bucket kept
     full = deletion_variant_pairs(df, "id", "nm").count()
     assert full == 30 * 29 // 2 + 1
+
+
+def _conf(spark):
+    return (
+        spark.conf.get("spark.sql.shuffle.partitions"),
+        spark.conf.get("spark.sql.adaptive.enabled"),
+    )
+
+
+def test_bounded_runners_reject_bad_state_partitions_untouched(
+    spark, tmp_path
+):
+    """``state_partitions`` is an int, ``"auto"`` or ``None``: any other
+    string fails at the call, before the session conf is written (it
+    used to be written verbatim into spark.sql.shuffle.partitions)."""
+    import pytest as _pytest
+
+    from enriched_crime_incident_data_pipeline_spark.streaming.corpus_ingest import (
+        run_corpus_ingest_stream,
+    )
+    from enriched_crime_incident_data_pipeline_spark.streaming.corpus_refresh import (
+        run_corpus_refresh_stream,
+    )
+    from enriched_crime_incident_data_pipeline_spark.streaming.source import (
+        stream_events,
+    )
+    from enriched_crime_incident_data_pipeline_spark.streaming.windows import (
+        run_available_now,
+    )
+
+    src = "/root/testdata/sf0.001/documents.parquet"
+    docs = spark.read.parquet(src)
+    before = _conf(spark)
+    runs = {
+        "available_now": lambda sp: run_available_now(
+            stream_events(spark, "/root/testdata/sf0.001"),
+            "bad_state_partitions",
+            "append",
+            state_partitions=sp,
+        ),
+        "corpus_ingest": lambda sp: run_corpus_ingest_stream(
+            spark, str(tmp_path), docs.schema, str(tmp_path),
+            state_partitions=sp,
+        ),
+        "corpus_refresh": lambda sp: run_corpus_refresh_stream(
+            spark, str(tmp_path), docs.schema, str(tmp_path), docs, docs,
+            cutoff=0, state_partitions=sp,
+        ),
+    }
+    for name, run in runs.items():
+        for bad in ("Auto", "8 "):
+            with _pytest.raises(ValueError, match="state_partitions"):
+                run(bad)
+            assert _conf(spark) == before, (name, bad)
+
+
+def test_bounded_run_conf_restored_after_failing_fold(spark, tmp_path):
+    """A fold that raises mid-stream (an out-of-order batch) still
+    restores the shuffle-partition and adaptive-execution conf it
+    pinned for the run."""
+    import pyarrow.parquet as pq
+    import pytest as _pytest
+
+    from enriched_crime_incident_data_pipeline_spark.streaming.corpus_ingest import (
+        run_corpus_ingest_stream,
+    )
+
+    src = "/root/testdata/sf0.001/documents.parquet"
+    t = pq.read_table(src).sort_by("doc_id")
+    docs_dir = str(tmp_path / "docs")
+    os.makedirs(docs_dir)
+    # the second file to arrive holds the LOWER ids: rejected
+    for i, part in enumerate((t.slice(100, 100), t.slice(0, 100))):
+        p = os.path.join(docs_dir, f"b{i}.parquet")
+        pq.write_table(part, p)
+        os.utime(p, (1_000_000_000 + i, 1_000_000_000 + i))
+    state_dir = str(tmp_path / "state")
+    os.makedirs(state_dir)
+    saved = _conf(spark)
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try:
+        with _pytest.raises(Exception, match="out-of-order"):
+            run_corpus_ingest_stream(
+                spark, docs_dir, spark.read.parquet(src).schema, state_dir,
+                state_partitions=3,
+            )
+        assert _conf(spark) == ("7", "true")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved[0])
+        spark.conf.set("spark.sql.adaptive.enabled", saved[1])

@@ -176,6 +176,29 @@ def test_cli_report_and_export(spark, tmp_path, capsys, isolated_logging):
     assert {"incident_num", "incident_ts", "weather", "side_of_town"} <= set(
         exported.columns
     )
+    # the CLI sinks the flagship query's own assembly: the export holds
+    # the incidents of the pre-projection builder, and projects to the
+    # flagship query's rows
+    from collections import Counter
+
+    from enriched_crime_incident_data_pipeline_spark import registry
+    from enriched_crime_incident_data_pipeline_spark.registry.crime import (
+        enriched_incidents,
+    )
+
+    sf = "/root/testdata/sf0.001"
+    built = enriched_incidents(spark, sf).select(
+        F.col("incident_num").cast("string")
+    )
+    assert exported.count() == built.count()
+    assert {r[0] for r in exported.select("incident_num").collect()} == {
+        r[0] for r in built.collect()
+    }
+    flagship = registry.spark_queries()["flagship_enriched_report"](spark, sf)
+    keys = ["nature", "side_of_town"]
+    assert Counter(
+        tuple(r) for r in exported.select(*keys).collect()
+    ) == Counter(tuple(r) for r in flagship.select(*keys).collect())
 
 
 def test_cli_list_run_explain(spark, capsys, isolated_logging):

@@ -157,3 +157,24 @@ def test_driver_rows_go_through_local_frame():
         f"createDataFrame( calls outside session.local_frame: {calls} — "
         "build driver-side rows with local_frame(spark, rows, schema)"
     )
+
+
+def test_package_compiles_without_escape_warnings():
+    """Every package module compiles with ``SyntaxWarning`` and
+    ``DeprecationWarning`` raised as errors: an invalid escape such as
+    ``"\\."`` in a non-raw literal warns today and is an error in a
+    later Python. Compiling from source checks it even when a cached
+    ``.pyc`` would skip the warning on import."""
+    import warnings
+
+    package = REGISTRY_DIR.parent
+    bad = {}
+    for path in sorted(package.rglob("*.py")):
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", SyntaxWarning)
+            warnings.simplefilter("error", DeprecationWarning)
+            try:
+                compile(path.read_text(), str(path), "exec")
+            except SyntaxError as exc:  # a warning raised as an error
+                bad[str(path.relative_to(package))] = f"{exc.lineno}: {exc.msg}"
+    assert not bad, f"modules with invalid escapes: {bad}"
