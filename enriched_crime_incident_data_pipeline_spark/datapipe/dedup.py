@@ -339,8 +339,9 @@ def lsh_candidate_pairs(
     corpus (interleaved A/B at sf0.1: dd26 4.2 → 2.4 s, and every
     ``lsh_candidate_pairs(minhash_bands(docs))`` caller inherits the
     halving). Pass ``pin=False`` when the input is already
-    materialized (a checkpointed batch relation in the streaming
-    foreachBatch paths) where the extra pin job outweighs the saved
+    materialized or is banded from a pinned signature relation (the
+    streaming folds band a lazily checkpointed per-batch signature
+    relation), where the extra pin job outweighs the saved
     recompute. The pin honors ``SPARK_GRAFT_PIN_MODE`` — see
     :func:`_pin` for the localCheckpoint-vs-persist reliability
     tradeoff on clusters."""
@@ -1093,9 +1094,9 @@ def incremental_lsh_pairs(
         .filter("a != b")
         .selectExpr("least(a, b) AS a", "greatest(a, b) AS b")
     )
-    # pin=False: every caller hands in an already-checkpointed
-    # batch-band relation (the foreachBatch paths), so the default
-    # pin would only add a per-batch job
+    # pin=False: the streaming folds hand in bands of a checkpointed
+    # per-batch signature relation, so the default pin would only add
+    # a per-batch job
     return cross.union(
         lsh_candidate_pairs(new_bands, id_col, pin=False)
     ).distinct()

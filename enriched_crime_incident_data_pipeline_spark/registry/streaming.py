@@ -259,48 +259,46 @@ def q_st14_stream_phash_probe(spark, sf_dir):
     )
 
 
-def q_st7_stream_corpus_ingest(spark, sf_dir):
-    # continuous corpus ingest: the documents table arrives as THREE
-    # id-ordered micro-batches; each batch probes the persistent band
-    # index (incremental LSH — work ∝ |batch|, never |corpus|²),
-    # drops near-dups of anything earlier, segment-dedups against the
-    # seen-segment state, and idempotently appends. Keep-earliest
-    # makes the fold prefix-stable, so the final state equals the
-    # batch twin (and the plain-SQL oracle) for any id-ordered split.
+def _two_batch_corpus_fold(spark, sf_dir, label, run, min_id=None):
+    """Stage ``documents`` (ids ``>= min_id`` when given) as TWO
+    id-ordered micro-batch files under a fresh temp root, call
+    ``run(docs_dir, schema, state_dir)``, and return its result
+    detached from the on-disk state."""
     import os
     import shutil
     import tempfile
 
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
-
-    from enriched_crime_incident_data_pipeline_spark.streaming.corpus_ingest import (
-        run_corpus_ingest_stream,
-    )
 
     src = os.path.join(sf_dir, "documents.parquet")
     t = pq.read_table(src).sort_by("doc_id")
+    if min_id is not None:
+        t = t.filter(pc.field("doc_id") >= min_id)
     n = t.num_rows
-    base = tempfile.mkdtemp(prefix="spark_graft_st7_")
+    base = tempfile.mkdtemp(prefix=f"spark_graft_{label}_")
     try:
         docs_dir = os.path.join(base, "docs")
         os.makedirs(docs_dir)
-        # TWO micro-batches (st28's r9 dial — the r6 floor
-        # decomposition showed per-batch FIXED machinery dominates at
-        # test SFs, so batch count is the cost; index-append +
-        # cross-batch probing still exercised, and the 3-batch
-        # prefix-stability contract stays pinned in
-        # test_multimodal_streaming)
+        # TWO micro-batches, not three: the r9 floor decomposition
+        # (SCALING §r9) measured the steady-state cost as ~1.4 s seed
+        # + ~1.65 s/batch FIXED machinery (writes + joins over tiny
+        # relations) + ~0.5 s stream overhead — per-batch probe work
+        # is a small fraction at sf0.1, so batch count IS the cost
+        # dial. Two batches still exercise index-append +
+        # cross-batch probing; the 3-batch prefix-stability contract
+        # stays pinned by test_multimodal_streaming.
         cuts = [0, n // 2, n]
         for i in range(2):
             path = os.path.join(docs_dir, f"batch{i}.parquet")
             pq.write_table(t.slice(cuts[i], cuts[i + 1] - cuts[i]), path)
             # file-stream source processes oldest-mtime first: pin the
-            # arrival order to the id order the keeper rule assumes
+            # arrival order to the id order the folds assume
             os.utime(path, (1_000_000_000 + i, 1_000_000_000 + i))
         schema = spark.read.parquet(src).schema
         state_dir = os.path.join(base, "state")
         os.makedirs(state_dir)
-        out = run_corpus_ingest_stream(spark, docs_dir, schema, state_dir)
+        out = run(docs_dir, schema, state_dir)
         # detach the result from the on-disk state (localCheckpoint
         # pins the rows in block storage), then remove the whole temp
         # root — docs, state parquet, and the per-run streaming
@@ -308,6 +306,28 @@ def q_st7_stream_corpus_ingest(spark, sf_dir):
         return out.localCheckpoint(eager=True)
     finally:
         shutil.rmtree(base, ignore_errors=True)
+
+
+def q_st7_stream_corpus_ingest(spark, sf_dir):
+    # continuous corpus ingest: the documents table arrives as
+    # id-ordered micro-batches; each batch probes the persistent band
+    # index (incremental LSH — work ∝ |batch|, never |corpus|²),
+    # drops near-dups of anything earlier, segment-dedups against the
+    # seen-segment state, and idempotently appends. Keep-earliest
+    # makes the fold prefix-stable, so the final state equals the
+    # batch twin (and the plain-SQL oracle) for any id-ordered split.
+    from enriched_crime_incident_data_pipeline_spark.streaming.corpus_ingest import (
+        run_corpus_ingest_stream,
+    )
+
+    return _two_batch_corpus_fold(
+        spark,
+        sf_dir,
+        "st7",
+        lambda docs_dir, schema, state_dir: run_corpus_ingest_stream(
+            spark, docs_dir, schema, state_dir
+        ),
+    )
 
 
 def q_st8_stream_decontaminate(spark, sf_dir):
@@ -1287,7 +1307,7 @@ def q_st29_stream_schema_drift(spark, sf_dir):
 def q_st28_stream_corpus_refresh(spark, sf_dir):
     # streaming-native corpus refresh (r7 verdict item 4): the
     # corpus_refresh1 verdict table produced INCREMENTALLY — arriving
-    # docs (id >= 250) stream in three id-ordered micro-batches; each
+    # docs (id >= 250) stream in id-ordered micro-batches; each
     # batch probes the PERSISTED band index (seeded from the standing
     # corpus, appended per batch — dd12's incremental-LSH mechanism,
     # never a batch recompute), the static old-fingerprint set, and
@@ -1296,53 +1316,23 @@ def q_st28_stream_corpus_refresh(spark, sf_dir):
     # accumulated verdicts equal the batch refresh for any id-ordered
     # split and corpus_refresh1's oracle serves verbatim. State is
     # bounded by band-index size. See streaming/corpus_refresh.py.
-    import os
-    import shutil
-    import tempfile
-
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
     from enriched_crime_incident_data_pipeline_spark.streaming.corpus_refresh import (
         run_corpus_refresh_stream,
     )
 
     cutoff = 250
-    src = os.path.join(sf_dir, "documents.parquet")
-    t = pq.read_table(src).sort_by("doc_id")
-    new_t = t.filter(pc.field("doc_id") >= cutoff)
-    n = new_t.num_rows
-    base = tempfile.mkdtemp(prefix="spark_graft_st28_")
-    try:
-        docs_dir = os.path.join(base, "docs")
-        os.makedirs(docs_dir)
-        # TWO micro-batches, not three: the r9 floor decomposition
-        # (SCALING §r9) measured the steady-state cost as ~1.4 s seed
-        # + ~1.65 s/batch FIXED machinery (writes + joins over tiny
-        # relations) + ~0.5 s stream overhead — per-batch probe work
-        # is a small fraction at sf0.1, so batch count IS the cost
-        # dial. Two batches still exercise index-append +
-        # cross-batch probing; the 3-batch prefix-stability contract
-        # stays pinned by test_multimodal_streaming's replay fixture.
-        cuts = [0, n // 2, n]
-        for i in range(2):
-            path = os.path.join(docs_dir, f"batch{i}.parquet")
-            pq.write_table(new_t.slice(cuts[i], cuts[i + 1] - cuts[i]), path)
-            os.utime(path, (1_000_000_000 + i, 1_000_000_000 + i))
+
+    def run(docs_dir, schema, state_dir):
         docs = load_table(spark, sf_dir, "documents")
         old_docs = docs.filter(F.col("doc_id") < cutoff)
         eval_docs = docs.filter(F.col("doc_id") % 50 == 0).select(
             "doc_id", "text"
         )
-        schema = spark.read.parquet(src).schema
-        state_dir = os.path.join(base, "state")
-        os.makedirs(state_dir)
-        out = run_corpus_refresh_stream(
+        return run_corpus_refresh_stream(
             spark, docs_dir, schema, state_dir, old_docs, eval_docs, cutoff
         )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+
+    return _two_batch_corpus_fold(spark, sf_dir, "st28", run, min_id=cutoff)
 
 
 QUERIES = {

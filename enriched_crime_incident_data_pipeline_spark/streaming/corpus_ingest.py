@@ -16,14 +16,9 @@ PERSISTENT state of everything ingested before it, then appended:
    the seen-segment state (or occurs earlier within the batch) drop;
    docs are rebuilt from the survivors.
 3. **idempotent append** — rebuilt docs, batch bands, and surviving
-   segment hashes union into ONE per-batch state subdirectory
-   (``batch=N`` of the single state relation — r11) written with
-   OVERWRITE: foreachBatch is at-least-once, so a crashed batch
-   replays — overwriting its own directory (and excluding it from
-   the state reads) makes the replay a no-op instead of a duplicate,
-   i.e. effective exactly-once without a transactional table format.
-   An id-order watermark (one JSON line, driver-side) rejects
-   genuinely out-of-order batches loudly.
+   segment hashes are written into the batch's directory of the
+   single state relation (the layout, replay and watermark contract
+   of :mod:`streaming.fold`).
 
 Keep-EARLIEST is the streaming-correct keeper rule: the batch
 builds' keep-longest (``dedup_drop_list``) needs the whole cluster
@@ -46,83 +41,34 @@ partitionable; work per batch is ∝ |batch| × hit-rate, never
 
 from __future__ import annotations
 
-import json
-import os
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from enriched_crime_incident_data_pipeline_spark.datapipe.dedup import (
+    bands_from_sigs,
     doc_segments,
     incremental_lsh_pairs,
     keep_first_segment,
     lsh_candidate_pairs,
     minhash_bands,
     rebuild_winners,
+    with_minhash_cols,
 )
 from enriched_crime_incident_data_pipeline_spark.schemas import INGEST_STATE_SCHEMA
-from enriched_crime_incident_data_pipeline_spark.streaming.source import read_state
+from enriched_crime_incident_data_pipeline_spark.streaming.fold import (
+    FoldState,
+    kind_sql,
+    run_fold,
+)
 
-# r11 (verdict item 1): ONE state relation instead of three. Band
-# rows (every seen doc), surviving segment hashes, and rebuilt corpus
-# rows share a union schema (each kind's unused columns NULL) and
-# land in the SAME per-batch directory with ONE write — the per-batch
-# fold runs one state-write job instead of three against a fixed
-# ~0.4-0.6 s/job micro-batch floor (guide §1.2/§5: fewer driver
-# barriers). Kind dispatch at read time is a NULL test on the kind's
-# witness column (band_id / seg_hash / n_kept); the union write emits
-# each branch's partitions as separate parquet FILES, so files stay
-# kind-pure and IS NOT NULL filters prune whole row groups via
-# parquet null-count stats.
+# the state's three kinds: band rows (every SEEN doc), surviving
+# segment hashes, and rebuilt corpus rows
 _STATE = "ingest_state"
-
-
-def _p(state_dir: str, name: str) -> str:
-    return os.path.join(state_dir, name)
-
-
-def _band_kind(bands: DataFrame) -> DataFrame:
-    return bands.selectExpr(
-        "doc_id",
-        "band_id",
-        "band_hash",
-        "CAST(NULL AS BINARY) AS seg_hash",
-        "CAST(NULL AS INT) AS n_kept",
-        "CAST(NULL AS STRING) AS deduped_text",
-    )
-
-
-def _seg_kind(segs: DataFrame) -> DataFrame:
-    return segs.selectExpr(
-        "CAST(NULL AS BIGINT) AS doc_id",
-        "CAST(NULL AS INT) AS band_id",
-        "CAST(NULL AS BINARY) AS band_hash",
-        "seg_hash",
-        "CAST(NULL AS INT) AS n_kept",
-        "CAST(NULL AS STRING) AS deduped_text",
-    )
-
-
-def _corpus_kind(rebuilt: DataFrame) -> DataFrame:
-    return rebuilt.selectExpr(
-        "doc_id",
-        "CAST(NULL AS INT) AS band_id",
-        "CAST(NULL AS BINARY) AS band_hash",
-        "CAST(NULL AS BINARY) AS seg_hash",
-        "n_kept",
-        "deduped_text",
-    )
-
-
-def _batch_p(state_dir: str, name: str, batch_id: int) -> str:
-    # one subdirectory per micro-batch, OVERWRITTEN on replay: Spark's
-    # foreachBatch is at-least-once, so a crashed batch re-runs — an
-    # append sink would duplicate its rows in the state; overwriting
-    # the batch's own directory makes every state write idempotent
-    # (effective exactly-once without a transactional table format)
-    return os.path.join(state_dir, name, f"batch={batch_id}")
+_BAND = kind_sql(INGEST_STATE_SCHEMA, "doc_id", "band_id", "band_hash")
+_SEG = kind_sql(INGEST_STATE_SCHEMA, "seg_hash")
+_CORPUS = kind_sql(INGEST_STATE_SCHEMA, "doc_id", "n_kept", "deduped_text")
 
 
 def corpus_ingest_batch(
@@ -132,65 +78,51 @@ def corpus_ingest_batch(
     of documents (``doc_id``, ``text``, …) into the corpus state under
     ``state_dir``."""
 
+    state = FoldState(state_dir, _STATE, INGEST_STATE_SCHEMA)
+
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         # ALL per-batch cuts are LAZY (r6, the r5 lazy-cut rule) and —
-        # r11 — the whole fold is ONE state-write job: bands, surviving
-        # segment hashes, and rebuilt corpus rows union into the
-        # batch's single state directory, so the fixed per-job
-        # micro-batch floor is paid once instead of three times. The
-        # lazy checkpoints still cut each multi-consumer relation
-        # (batch_df, new_bands, kept_docs, kept_segs): within the one
-        # job the first stage that computes a pinned relation caches
-        # its blocks and later stages read them — two stages racing on
-        # a not-yet-cached pin can compute a batch-sized map chain
-        # twice (measured small next to the saved job barriers; the
-        # work is bounded by ONE batch, never the corpus).
-        # the id-bounds ride the write as observe() metrics (r6); the
-        # out-of-order check runs right after it and un-writes the
-        # batch's single state directory before raising, so a rejected
-        # batch leaves NO trace.
-        from pyspark.sql import Observation
-
-        batch_df = batch_df.localCheckpoint(eager=False)
-        new_bands = minhash_bands(batch_df).localCheckpoint(eager=False)
-        # the observation attaches DOWNSTREAM of the lazy checkpoint,
-        # on the relation the band-state write scans (a lazy
-        # localCheckpoint call emits an empty metrics event, so
-        # observing upstream of it yields None bounds — measured).
-        # Every doc emits one band row per band, so min/max doc_id
-        # over the band table equals min/max over the batch.
-        obs = Observation(f"corpus_ingest_bounds_{batch_id}")
-        bands_out = new_bands.observe(
-            obs, F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
+        # r11 — the whole fold is ONE state-write job. The lazy
+        # checkpoints cut each multi-consumer relation (base,
+        # kept_docs, kept_segs): within the one job the first stage
+        # that computes a pinned relation caches its blocks and later
+        # stages read them — two stages racing on a not-yet-cached pin
+        # can compute a batch-sized map chain twice (measured small
+        # next to the saved job barriers; the work is bounded by ONE
+        # batch, never the corpus).
+        # ONE MinHash pass over the batch text (the refresh fold's
+        # shape): the 16 minima ride a projection of (id, text), and
+        # the text stays, because segments and the rebuild need it.
+        # No fan_out: inside foreachBatch the batch is a static frame,
+        # and micro-batch sizing belongs to the source.
+        base = with_minhash_cols(batch_df.select("doc_id", "text")).localCheckpoint(
+            eager=False
         )
-        state_path = _p(state_dir, _STATE)
-        # ONE state read per batch, under the declared schema (no
-        # footer job); it excludes this batch's own (possibly partial)
-        # earlier attempt — state reads must not see replay debris —
-        # and each consumer picks its kind by the witness column
-        state = (
-            read_state(spark, state_path, INGEST_STATE_SCHEMA).filter(
-                f"batch != {int(batch_id)}"
-            )
-            if os.path.exists(state_path)
-            else None
-        )
-        if state is not None:
-            index = state.filter("band_id IS NOT NULL").select(
+        new_bands = bands_from_sigs(base)
+        # every doc emits one band row per band, so min/max doc_id
+        # over the band table equals min/max over the batch
+        bands_out, obs = state.observe_ids(new_bands, batch_id)
+        # ONE state read per batch; each consumer picks its kind by
+        # the witness column
+        prior = state.prior(spark, batch_id)
+        if prior is not None:
+            index = prior.filter("band_id IS NOT NULL").select(
                 "doc_id", "band_id", "band_hash"
             )
             pairs = incremental_lsh_pairs(new_bands, index)
         else:
-            # new_bands is already lazily checkpointed above — the
+            # new_bands is a projection of the pinned base — the
             # default pin would just add a per-batch job
             pairs = lsh_candidate_pairs(new_bands, pin=False)
         # keep-earliest: a pair (a, b) with a < b drops b; with
         # id-ordered arrival the greater side is always in this batch
         dropped = pairs.select(F.col("b").alias("doc_id")).distinct()
-        kept_docs = batch_df.join(
-            dropped, "doc_id", "left_anti"
-        ).localCheckpoint(eager=False)
+        kept_docs = (
+            base.select("doc_id", "text")
+            .join(dropped, "doc_id", "left_anti")
+            .localCheckpoint(eager=False)
+        )
         # segment text is projected away right after the map-side md5:
         # the seen-state anti-join and the keeper aggregate move only
         # (seg_hash, encoded id·2²¹+idx) — text re-enters via the
@@ -199,57 +131,25 @@ def corpus_ingest_batch(
         segs = doc_segments(kept_docs, seg_tokens).select(
             "doc_id", "seg_idx", "seg_hash"
         )
-        if state is not None:
-            seen = state.filter("seg_hash IS NOT NULL").select("seg_hash")
+        if prior is not None:
+            seen = prior.filter("seg_hash IS NOT NULL").select("seg_hash")
             segs = segs.join(seen, "seg_hash", "left_anti")
         kept_segs = keep_first_segment(segs).localCheckpoint(eager=False)
         rebuilt = rebuild_winners(kept_segs, kept_docs, seg_tokens)
-        # ONE state write per batch (r11): bands + surviving segment
-        # hashes + rebuilt corpus rows union into the batch's directory
-        _band_kind(bands_out).unionByName(
-            _seg_kind(kept_segs.select("seg_hash"))
-        ).unionByName(_corpus_kind(rebuilt)).write.mode("overwrite").parquet(
-            _batch_p(state_dir, _STATE, batch_id)
+        state.write(
+            bands_out.selectExpr(*_BAND)
+            .unionByName(kept_segs.selectExpr(*_SEG))
+            .unionByName(rebuilt.selectExpr(*_CORPUS)),
+            batch_id,
         )
         # keep-earliest assumes id-ordered arrival (docs arrive
         # chronologically, ids assigned monotonically). An
         # out-of-order batch would need to retract an already-appended
         # doc — fail loudly instead of silently producing a different
-        # corpus than the batch twin. The watermark is a one-line
-        # driver-side file, not a scan of the growing index; the
-        # bounds come from the observe() metrics of the state write
-        # (the batch's one job), so the check costs no job.
-        bounds = obs.get
-        wm_path = _p(state_dir, "_id_watermark")
-        if bounds["lo"] is not None and os.path.exists(wm_path):
-            with open(wm_path) as fh:
-                wm = json.load(fh)
-            # a REPLAY of this same batch (crash after the watermark
-            # write, before the stream checkpoint committed) is legal
-            # — the per-batch overwrite makes it idempotent; only a
-            # genuinely different, earlier-id batch is an error
-            if wm["batch_id"] != batch_id and bounds["lo"] <= wm["hi"]:
-                # un-write this batch's single state directory before
-                # failing so the rejected batch leaves NO trace
-                import shutil
-
-                shutil.rmtree(
-                    _batch_p(state_dir, _STATE, batch_id),
-                    ignore_errors=True,
-                )
-                raise ValueError(
-                    f"out-of-order ingest: batch {batch_id} min doc_id "
-                    f"{bounds['lo']} <= already-indexed max {wm['hi']}; "
-                    "keep-earliest dedup requires id-ordered batches"
-                )
-        if bounds["hi"] is not None:
-            # atomic: write-then-rename so a crash mid-write leaves the
-            # old complete watermark, never truncated JSON that would
-            # wedge the next batch's json.load
-            tmp_path = wm_path + ".tmp"
-            with open(tmp_path, "w") as fh:
-                json.dump({"batch_id": batch_id, "hi": bounds["hi"]}, fh)
-            os.replace(tmp_path, wm_path)
+        # corpus than the batch twin.
+        state.guard_ids(
+            obs, batch_id, "ingest", "keep-earliest dedup requires id-ordered batches"
+        )
 
     return fn
 
@@ -281,30 +181,17 @@ def run_corpus_ingest_stream(
         bounded_run_conf,
     )
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-    )
     # AQE off for the fold (r11): the fold's shuffles are pinned to
     # ``state_partitions`` (nothing for AQE coalescing to do) and AQE
     # materializes every exchange as its own driver job — measured
     # 10-14 → 3-6 jobs per batch, ~0.3-0.8 s/batch at sf0.1; see
     # corpus_refresh.py's runner for the full rationale.
     with bounded_run_conf(spark, state_partitions, adaptive=False):
-        q = (
-            stream.writeStream.foreachBatch(
-                corpus_ingest_batch(state_dir, seg_tokens)
-            )
-            .option(
-                "checkpointLocation", _p(state_dir, f"_ckpt_{uuid.uuid4().hex}")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        fn = corpus_ingest_batch(state_dir, seg_tokens)
+        run_fold(spark, docs_dir, schema, state_dir, fn)
     return (
-        read_state(spark, _p(state_dir, _STATE), INGEST_STATE_SCHEMA)
+        FoldState(state_dir, _STATE, INGEST_STATE_SCHEMA)
+        .read(spark)
         .filter(F.col("n_kept").isNotNull())
         .select("doc_id", "n_kept", "deduped_text")
     )

@@ -45,29 +45,23 @@ three to four Spark jobs.
 
 Unlike the st7 ingest (which rebuilds corpus text), the refresh is a
 pure CLASSIFIER: per batch it writes one verdict row per arriving
-doc plus the batch's bands — ONE union write into the batch's
-``batch=N`` subdirectory of the single state relation (r11) with
-OVERWRITE, so an at-least-once foreachBatch replay is idempotent
-(st7's effective-exactly-once trick), and every state read excludes
-the replaying batch's own directory, which the overwrite is
-deleting.  State size is the band index (∝ docs seen × bands/doc, the
-same artifact dd12 already persists) plus the two static side inputs
-— bounded by index size, never by stream length.
+doc plus the batch's bands into the batch's directory of the single
+state relation (the layout, replay and watermark contract of
+:mod:`streaming.fold`).  State size is the band index (∝ docs seen ×
+bands/doc, the same artifact dd12 already persists) plus the two
+static side inputs — bounded by index size, never by stream length.
+An arriving doc must have ``doc_id >= cutoff``: the batch refresh
+counts a smaller id as old, so a batch holding one is rejected like
+an out-of-order batch.
 
 Scale: per batch the only wide ops are the band equi-join against
 the index (65k-value bucket domain), the fingerprint join
 (broadcast-sized: distinct md5s of the standing corpus), and the
-verdict left-joins over BATCH-sized relations.  The out-of-order
-guard is the st7 id-watermark: bounds ride the band write's
-``observe()`` metrics, so the check costs no extra job.
+verdict left-joins over BATCH-sized relations.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -89,63 +83,18 @@ from enriched_crime_incident_data_pipeline_spark.functions.text import (
 from enriched_crime_incident_data_pipeline_spark.schemas import (
     REFRESH_STATE_SCHEMA,
 )
-from enriched_crime_incident_data_pipeline_spark.streaming.source import (
-    read_state,
+from enriched_crime_incident_data_pipeline_spark.streaming.fold import (
+    FoldState,
+    kind_sql,
+    run_fold,
 )
 
-# r11 (verdict item 1): ONE state relation instead of three. Band
-# rows, verdict rows, and the seed's old-corpus fingerprint rows share
-# a union schema (each kind's unused columns NULL) and land in the
-# SAME per-batch directory with ONE write — the per-batch fold runs
-# one state-write job instead of two, and the seed runs one instead
-# of two, against a fixed ~0.4-0.6 s/job micro-batch floor (guide
-# §1.2/§5: fewer driver barriers). Kind dispatch at read time is a
-# NULL test on the kind's witness column (band_id / verdict /
-# fingerprint); the union write emits each branch's partitions as
-# separate parquet FILES, so files stay kind-pure and the IS NOT NULL
-# filters prune whole row groups via parquet null-count stats —
-# readers never pay for the kinds they skip.
+# the state's three kinds: band rows (seed + every batch), verdict
+# rows, and the seed's old-corpus fingerprint rows
 _STATE = "refresh_state"
-
-
-def _p(state_dir: str, name: str) -> str:
-    return os.path.join(state_dir, name)
-
-
-def _batch_p(state_dir: str, name: str, batch_id: int) -> str:
-    return os.path.join(state_dir, name, f"batch={batch_id}")
-
-
-# the kind projections are SQL text: one py4j call each per batch,
-# where the Column form costs a round trip per function per NULL
-def _band_kind(bands: DataFrame) -> DataFrame:
-    return bands.selectExpr(
-        "doc_id",
-        "band_id",
-        "band_hash",
-        "CAST(NULL AS STRING) AS verdict",
-        "CAST(NULL AS STRING) AS fingerprint",
-    )
-
-
-def _verdict_kind(verdicts: DataFrame) -> DataFrame:
-    return verdicts.selectExpr(
-        "doc_id",
-        "CAST(NULL AS INT) AS band_id",
-        "CAST(NULL AS BINARY) AS band_hash",
-        "verdict",
-        "CAST(NULL AS STRING) AS fingerprint",
-    )
-
-
-def _fingerprint_kind(fps: DataFrame) -> DataFrame:
-    return fps.selectExpr(
-        "CAST(NULL AS BIGINT) AS doc_id",
-        "CAST(NULL AS INT) AS band_id",
-        "CAST(NULL AS BINARY) AS band_hash",
-        "CAST(NULL AS STRING) AS verdict",
-        "fingerprint",
-    )
+_BAND = kind_sql(REFRESH_STATE_SCHEMA, "doc_id", "band_id", "band_hash")
+_VERDICT = kind_sql(REFRESH_STATE_SCHEMA, "doc_id", "verdict")
+_FINGERPRINT = kind_sql(REFRESH_STATE_SCHEMA, "fingerprint")
 
 
 def corpus_refresh_batch(
@@ -157,10 +106,10 @@ def corpus_refresh_batch(
     (ids < cutoff are the old corpus); ``probe`` is the contamination
     probe over the pre-collected static eval-gram set, built once per
     fold by its owner, who releases it when the fold ends."""
-    # the per-row probes and aggregates, built once per fold
+    # the state, the per-row probes and aggregates, built once per fold
+    state = FoldState(state_dir, _STATE, REFRESH_STATE_SCHEMA)
     fingerprint = doc_fingerprint(F.col("text")).alias("fingerprint")
     contaminated = probe.flag(tokens(F.col("text"))).alias("contaminated")
-    id_bounds = (F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
     min_a = F.min("a").alias("_mina")
     # exact_dup > near_dup_old > near_dup_new > contaminated > kept;
     # near_old ⇔ ∃ partner a < cutoff ⇔ min(a) < cutoff
@@ -174,8 +123,6 @@ def corpus_refresh_batch(
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        from pyspark.sql import Observation
-
         # ONE pass over the batch text: fingerprint, contamination
         # flag and the 16 MinHash minima in a single projection,
         # pinned with the text dropped, so every later consumer (band
@@ -192,22 +139,15 @@ def corpus_refresh_batch(
             .localCheckpoint(eager=False)
         )
         new_bands = bands_from_sigs(base)
-        obs = Observation(f"corpus_refresh_bounds_{batch_id}")
-        bands_out = new_bands.observe(obs, *id_bounds)
-        # ONE state read per batch, under the declared schema (no
-        # footer job). The index always exists (seeded with the old
-        # corpus's bands at stream start); exclude this batch's own
-        # possibly-partial replay debris, and dispatch kinds by the
-        # witness column. The static fingerprint set lives in the
-        # seed directory (batch=-1); IS NOT NULL prunes every other
-        # file by null-count stats.
-        state = read_state(
-            spark, _p(state_dir, _STATE), REFRESH_STATE_SCHEMA
-        ).filter(f"batch != {int(batch_id)}")
-        index = state.filter("band_id IS NOT NULL").select(
+        bands_out, obs = state.observe_ids(new_bands, batch_id)
+        # ONE state read per batch; the index always exists (seeded
+        # with the old corpus's bands at stream start). The static
+        # fingerprint set lives in the seed directory (batch=-1).
+        prior = state.prior(spark, batch_id)
+        index = prior.filter("band_id IS NOT NULL").select(
             "doc_id", "band_id", "band_hash"
         )
-        old_fps = state.filter("fingerprint IS NOT NULL").selectExpr(
+        old_fps = prior.filter("fingerprint IS NOT NULL").selectExpr(
             "fingerprint", "true AS _old"
         )
         near = (
@@ -226,36 +166,22 @@ def corpus_refresh_batch(
             .join(near, "doc_id", "left")
             .selectExpr("doc_id", verdict)
         )
-        # ONE state write per batch (r11): bands + verdicts union into
-        # the batch's directory — the union's branches stay separate
-        # output files, so read-side NULL-witness filters prune cleanly
-        _band_kind(bands_out).unionByName(_verdict_kind(verdicts)).write.mode(
-            "overwrite"
-        ).parquet(_batch_p(state_dir, _STATE, batch_id))
-        # id-watermark out-of-order guard (st7's): a smaller-id batch
-        # after a larger one would need to retro-flag already-emitted
-        # verdicts — fail loudly, un-writing this batch's state (the
-        # single per-batch directory, so the rejected batch leaves no
-        # trace at all)
-        bounds = obs.get
-        wm_path = _p(state_dir, "_id_watermark")
-        if bounds["lo"] is not None and os.path.exists(wm_path):
-            with open(wm_path) as fh:
-                wm = json.load(fh)
-            if wm["batch_id"] != batch_id and bounds["lo"] <= wm["hi"]:
-                shutil.rmtree(
-                    _batch_p(state_dir, _STATE, batch_id), ignore_errors=True
-                )
-                raise ValueError(
-                    f"out-of-order refresh: batch {batch_id} min doc_id "
-                    f"{bounds['lo']} <= already-indexed max {wm['hi']}; "
-                    "prefix-stable verdicts require id-ordered batches"
-                )
-        if bounds["hi"] is not None:
-            tmp_path = wm_path + ".tmp"
-            with open(tmp_path, "w") as fh:
-                json.dump({"batch_id": batch_id, "hi": bounds["hi"]}, fh)
-            os.replace(tmp_path, wm_path)
+        state.write(
+            bands_out.selectExpr(*_BAND).unionByName(
+                verdicts.selectExpr(*_VERDICT)
+            ),
+            batch_id,
+        )
+        # a smaller-id batch after a larger one would need to
+        # retro-flag already-emitted verdicts, and an id below the
+        # cutoff is old to the batch refresh: fail loudly instead
+        state.guard_ids(
+            obs,
+            batch_id,
+            "refresh",
+            "prefix-stable verdicts require id-ordered batches",
+            floor=cutoff,
+        )
 
     return fn
 
@@ -278,13 +204,12 @@ def run_corpus_refresh_stream(
     verdict table ``(doc_id, verdict)`` — one row per arriving doc,
     pinned ≡ the batch refresh (``q_corpus_refresh1``) for any
     id-ordered split."""
-    # seed: old bands + old fingerprints under batch=-1 (a real batch
-    # id is ≥ 0, so the replay-exclusion filter never drops the seed)
-    # in ONE write (r11) — the standing corpus is the BIG side at
-    # scale, so its text is scanned once (with_minhash_cols computes
-    # the fingerprint and the 16 minhash minima in the same pass,
-    # corpus_build3's fusion idiom) instead of once per artifact;
-    # eval grams collected ONCE as before
+    # seed: old bands + old fingerprints under batch=-1 in ONE write
+    # (r11) — the standing corpus is the BIG side at scale, so its
+    # text is scanned once (with_minhash_cols computes the fingerprint
+    # and the 16 minhash minima in the same pass, corpus_build3's
+    # fusion idiom) instead of once per artifact; eval grams collected
+    # ONCE as before
     from enriched_crime_incident_data_pipeline_spark.streaming.windows import (
         bounded_run_conf,
     )
@@ -301,6 +226,7 @@ def run_corpus_refresh_stream(
     # A deployment whose band buckets skew re-enables AQE by sizing
     # partitions via $SPARK_GRAFT_STATE_PARTITIONS and flipping the
     # session conf — the fold restores whatever was set before.
+    state = FoldState(state_dir, _STATE, REFRESH_STATE_SCHEMA)
     probe = None
     with bounded_run_conf(spark, state_partitions, adaptive=False):
         try:
@@ -314,9 +240,13 @@ def run_corpus_refresh_stream(
                 # the pin so the checkpointed relation is (id, fp, 16
                 # longs)
             ).drop("text").localCheckpoint(eager=False)
-            _band_kind(bands_from_sigs(old_base)).unionByName(
-                _fingerprint_kind(old_base.select("fingerprint").distinct())
-            ).write.mode("overwrite").parquet(_batch_p(state_dir, _STATE, -1))
+            state.write(
+                bands_from_sigs(old_base).selectExpr(*_BAND).unionByName(
+                    old_base.select("fingerprint").distinct()
+                    .selectExpr(*_FINGERPRINT)
+                ),
+                -1,
+            )
             probe = GramProbe(
                 spark.sparkContext,
                 frozenset(
@@ -328,28 +258,18 @@ def run_corpus_refresh_stream(
                 ),
                 ngram,
             )
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(new_docs_dir)
+            run_fold(
+                spark,
+                new_docs_dir,
+                schema,
+                state_dir,
+                corpus_refresh_batch(state_dir, cutoff, probe),
             )
-            q = (
-                stream.writeStream.foreachBatch(
-                    corpus_refresh_batch(state_dir, cutoff, probe)
-                )
-                .option(
-                    "checkpointLocation",
-                    _p(state_dir, f"_ckpt_{uuid.uuid4().hex}"),
-                )
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
         finally:
             if probe is not None:
                 probe.release()
     return (
-        read_state(spark, _p(state_dir, _STATE), REFRESH_STATE_SCHEMA)
+        state.read(spark)
         .filter(F.col("verdict").isNotNull())
         .select("doc_id", "verdict")
     )

@@ -17,6 +17,7 @@ backfill.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 
@@ -28,34 +29,16 @@ from pyspark.sql import types as T
 def stream_events(
     spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    """events.parquet as a streaming DataFrame (ts converted from
-    stored nanos to micro-precision timestamps, as in the batch
-    loader; reading stored nanos needs the session's
+    """events.parquet as a streaming DataFrame (:func:`stream_table`,
+    with ts converted from stored nanos to micro-precision timestamps,
+    as in the batch loader; reading stored nanos needs the session's
     ``spark.sql.legacy.parquet.nanosAsLong``, which ``get_spark``
     pins)."""
-    path = os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
-    # the file source streams *directories* (new files appear, the
-    # checkpoint tracks which were seen); the testdata table is a bare
-    # file, so stage a symlink under a per-sf scratch dir — the same
-    # shape a live feed has, one parquet file per arriving report
-    stage = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_stream",
-        sf_dir.strip(os.sep).replace(os.sep, "_"),
-    )
-    os.makedirs(stage, exist_ok=True)
-    link = os.path.join(stage, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(path, link)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(stage)
     from enriched_crime_incident_data_pipeline_spark.sources.catalog import (
         as_micros_timestamp,
     )
 
+    df = stream_table(spark, sf_dir, "events", max_files_per_trigger)
     return df.withColumn("ts", as_micros_timestamp(df, "ts"))
 
 
@@ -74,26 +57,27 @@ def stream_table(
     name: str,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """Any testdata table as a streaming DataFrame via the same
-    staged-symlink file source ``stream_events`` uses (one parquet
-    file per "arriving" batch, checkpoint-tracked)."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    """Any testdata table as a streaming DataFrame. The file source
+    streams *directories* (new files appear, the checkpoint tracks
+    which were seen); the testdata table is a bare file, so it is
+    staged as a symlink under a per-table scratch dir — the same shape
+    a live feed has, one parquet file per arriving report."""
+    path = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
     schema = spark.read.parquet(path).schema
+    # the readable stem alone is not injective (``/t/x/a_b`` and
+    # ``/t/x_a/b`` both mangle to ``t_x_a_b``), so the digest of the
+    # absolute path keys the stage: two tables never share a link
+    stem = os.path.dirname(path).strip(os.sep).replace(os.sep, "_")
+    digest = hashlib.sha1(path.encode()).hexdigest()[:12]
     stage = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_stream",
-        sf_dir.strip(os.sep).replace(os.sep, "_") + f"_{name}",
+        tempfile.gettempdir(), "spark_graft_stream", f"{stem}_{name}_{digest}"
     )
     os.makedirs(stage, exist_ok=True)
     link = os.path.join(stage, f"{name}.parquet")
-    # lexists, not exists: exists() follows the symlink, so a stale
-    # link whose target was moved/recreated reads as "absent" and the
-    # re-create raises FileExistsError instead of repairing the stage
-    if os.path.lexists(link):
-        if os.path.realpath(link) != os.path.realpath(path):
-            os.unlink(link)
-            os.symlink(path, link)
-    else:
+    # lexists, not exists: exists() follows the symlink, so a link
+    # whose target is momentarily absent reads as "absent" and the
+    # re-create raises FileExistsError
+    if not os.path.lexists(link):
         os.symlink(path, link)
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:

@@ -289,6 +289,52 @@ def test_stream_corpus_ingest_replay_is_idempotent(spark, tmp_path):
     assert twice == once
 
 
+
+def test_corpus_ingest_batch_fixed_cost(spark, tmp_path):
+    """A repeated ingest micro-batch (a replay of the second batch,
+    under the fold's conf: AQE off, shuffle partitions pinned) runs at
+    most 5 Spark jobs — the state write and its broadcast probes: the
+    one MinHash pass is pinned lazily and rides them, and the state
+    read declares its schema — and compiles no new class."""
+    from enriched_crime_incident_data_pipeline_spark.streaming.corpus_ingest import (
+        corpus_ingest_batch,
+    )
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    state_dir = str(tmp_path / "state")
+    os.makedirs(state_dir)
+    fn = corpus_ingest_batch(state_dir)
+    b1 = docs.filter(F.col("doc_id") >= 250)
+    sc = spark.sparkContext
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def jobs_and_compiles(group):
+        c0 = compiles.METRIC_COMPILATION_TIME().getCount()
+        sc.setJobGroup(group, group)
+        try:
+            fn(b1, 1)
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        return n_jobs, compiles.METRIC_COMPILATION_TIME().getCount() - c0
+
+    prev = {
+        k: spark.conf.get(k)
+        for k in ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    }
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        fn(docs.filter(F.col("doc_id") < 250), 0)
+        jobs_and_compiles("ingest_warm")
+        n_jobs, n_compiles = jobs_and_compiles("ingest_again")
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    assert n_jobs <= 5
+    assert n_compiles == 0
+
 def test_stream_decontaminate_equals_batch_probe(spark):
     """st8: the AvailableNow streaming contamination guard emits
     exactly the batch probe's contaminated-doc set."""
@@ -705,6 +751,65 @@ def test_corpus_refresh_batch_fixed_cost(spark, tmp_path):
     assert n_jobs <= 4
     assert n_compiles == 0
 
+
+
+def test_corpus_refresh_batch_rejects_ids_below_cutoff(spark, tmp_path):
+    """An arriving doc with ``doc_id < cutoff`` is old to the batch
+    refresh, so a batch holding one contradicts the refresh contract:
+    it must fail loudly and leave no state trace."""
+    import pytest as _pytest
+
+    from enriched_crime_incident_data_pipeline_spark.datapipe.decontaminate import (
+        GramProbe,
+    )
+    from enriched_crime_incident_data_pipeline_spark.streaming.corpus_refresh import (
+        corpus_refresh_batch,
+    )
+
+    state_dir, _, grams, _ = _tiny_refresh(spark, tmp_path)
+    probe = GramProbe(spark.sparkContext, grams, 8)
+    fn = corpus_refresh_batch(state_dir, _TINY_CUTOFF, probe)
+    straddling = spark.createDataFrame(
+        [(i, f"arriving doc number {i} of the straddling batch") for i in range(8, 16)],
+        "doc_id long, text string",
+    )
+    try:
+        with _pytest.raises(ValueError, match="cutoff"):
+            fn(straddling, 1)
+    finally:
+        probe.release()
+    assert not os.path.exists(
+        os.path.join(state_dir, "refresh_state", "batch=1")
+    )
+
+
+def test_fold_kind_projections_null_cast_the_other_columns():
+    """Each kind projection lists the state schema's columns in order
+    (the ``batch`` partition column aside): the kind's own columns by
+    name, every other one as a typed NULL."""
+    from enriched_crime_incident_data_pipeline_spark.schemas import (
+        INGEST_STATE_SCHEMA,
+        REFRESH_STATE_SCHEMA,
+    )
+    from enriched_crime_incident_data_pipeline_spark.streaming.fold import (
+        kind_sql,
+    )
+
+    assert kind_sql(REFRESH_STATE_SCHEMA, "doc_id", "verdict") == (
+        "doc_id",
+        "CAST(NULL AS INT) AS band_id",
+        "CAST(NULL AS BINARY) AS band_hash",
+        "verdict",
+        "CAST(NULL AS STRING) AS fingerprint",
+    )
+    assert kind_sql(INGEST_STATE_SCHEMA, "seg_hash") == (
+        "CAST(NULL AS BIGINT) AS doc_id",
+        "CAST(NULL AS INT) AS band_id",
+        "CAST(NULL AS BINARY) AS band_hash",
+        "seg_hash",
+        "CAST(NULL AS INT) AS n_kept",
+        "CAST(NULL AS STRING) AS deduped_text",
+    )
 
 def test_stream_corpus_folds_write_their_declared_state_schemas(
     spark, tmp_path

@@ -237,3 +237,54 @@ def test_load_table_fails_loudly_without_the_loader_conf(spark):
             load_table(spark, SF_DIR, "events")
     finally:
         spark.conf.set(key, saved)
+
+
+def _events_file(sf_dir, ids, extra=None):
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cols = {
+        "event_id": pa.array(ids, pa.int64()),
+        "ts": pa.array(
+            [dt.datetime(2026, 1, 1, 0, 0, i) for i in ids],
+            pa.timestamp("us", tz="UTC"),
+        ),
+    }
+    if extra:
+        cols[extra] = pa.array([f"{extra}{i}" for i in ids])
+    sf_dir.mkdir(parents=True)
+    pq.write_table(pa.table(cols), str(sf_dir / "events.parquet"))
+
+
+def test_stream_events_stages_each_sf_dir_apart(spark, tmp_path, monkeypatch):
+    """``/x/a_b`` and ``/x_a/b`` mangle to one readable stage name; each
+    stream must still read its own events under its own schema, and a
+    relative ``sf_dir`` must stage a link that resolves."""
+    import tempfile
+
+    from enriched_crime_incident_data_pipeline_spark.streaming import (
+        run_available_now,
+        stream_events,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    _events_file(tmp_path / "x" / "a_b", [1, 2, 3])
+    _events_file(tmp_path / "x_a" / "b", [7, 8], extra="tag")
+    a = stream_events(spark, str(tmp_path / "x" / "a_b"))
+    b = stream_events(spark, str(tmp_path / "x_a" / "b"))
+    got_a = run_available_now(a, "stage_apart_a", "append", None).collect()
+    got_b = run_available_now(b, "stage_apart_b", "append", None).collect()
+    assert sorted(r["event_id"] for r in got_a) == [1, 2, 3]
+    assert sorted((r["event_id"], r["tag"]) for r in got_b) == [
+        (7, "tag7"),
+        (8, "tag8"),
+    ]
+
+    monkeypatch.chdir(tmp_path)
+    _events_file(tmp_path / "rel", [5])
+    got = run_available_now(
+        stream_events(spark, "rel"), "stage_apart_rel", "append", None
+    ).collect()
+    assert [r["event_id"] for r in got] == [5]
