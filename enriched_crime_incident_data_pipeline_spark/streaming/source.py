@@ -64,13 +64,12 @@ def stream_table(
     a live feed has, one parquet file per arriving report."""
     path = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
     schema = spark.read.parquet(path).schema
-    # the readable stem alone is not injective (``/t/x/a_b`` and
-    # ``/t/x_a/b`` both mangle to ``t_x_a_b``), so the digest of the
-    # absolute path keys the stage: two tables never share a link
-    stem = os.path.dirname(path).strip(os.sep).replace(os.sep, "_")
+    # the stage is keyed by a digest of the absolute path: a mangled
+    # directory name is not injective (``/t/x/a_b`` and ``/t/x_a/b``
+    # both read ``t_x_a_b``), so two tables never share a link
     digest = hashlib.sha1(path.encode()).hexdigest()[:12]
     stage = os.path.join(
-        tempfile.gettempdir(), "spark_graft_stream", f"{stem}_{name}_{digest}"
+        tempfile.gettempdir(), "spark_graft_stream", f"{name}_{digest}"
     )
     os.makedirs(stage, exist_ok=True)
     link = os.path.join(stage, f"{name}.parquet")

@@ -756,7 +756,10 @@ def test_corpus_refresh_batch_fixed_cost(spark, tmp_path):
 def test_corpus_refresh_batch_rejects_ids_below_cutoff(spark, tmp_path):
     """An arriving doc with ``doc_id < cutoff`` is old to the batch
     refresh, so a batch holding one contradicts the refresh contract:
-    it must fail loudly and leave no state trace."""
+    it must fail loudly and leave no state trace — also as the
+    stream's FIRST batch, where no watermark exists yet to catch it."""
+    import shutil
+
     import pytest as _pytest
 
     from enriched_crime_incident_data_pipeline_spark.datapipe.decontaminate import (
@@ -767,6 +770,11 @@ def test_corpus_refresh_batch_rejects_ids_below_cutoff(spark, tmp_path):
     )
 
     state_dir, _, grams, _ = _tiny_refresh(spark, tmp_path)
+    # back to the state as the stream starts: the seed alone, no
+    # arriving batch and no watermark
+    state_path = os.path.join(state_dir, "refresh_state")
+    shutil.rmtree(os.path.join(state_path, "batch=0"))
+    os.remove(os.path.join(state_dir, "_id_watermark"))
     probe = GramProbe(spark.sparkContext, grams, 8)
     fn = corpus_refresh_batch(state_dir, _TINY_CUTOFF, probe)
     straddling = spark.createDataFrame(
@@ -775,12 +783,13 @@ def test_corpus_refresh_batch_rejects_ids_below_cutoff(spark, tmp_path):
     )
     try:
         with _pytest.raises(ValueError, match="cutoff"):
-            fn(straddling, 1)
+            fn(straddling, 0)
     finally:
         probe.release()
-    assert not os.path.exists(
-        os.path.join(state_dir, "refresh_state", "batch=1")
-    )
+    assert sorted(d for d in os.listdir(state_path) if d.startswith("batch=")) == [
+        "batch=-1"
+    ]
+    assert not os.path.exists(os.path.join(state_dir, "_id_watermark"))
 
 
 def test_fold_kind_projections_null_cast_the_other_columns():
